@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Optimization-round measurement harness (guide §1): for the queries
@@ -16,7 +15,6 @@ import org.apache.spark.sql.execution.ExplainMode
 object BenchProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "4").toInt
     val names = sys.env.get("SPARK_GRAFT_QUERIES") match {
       case Some(qs) => qs.split(",").map(_.trim).filter(_.nonEmpty).toSeq
@@ -29,21 +27,8 @@ object BenchProfile {
       sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
         .flatMap(_.split(";")).filter(_.contains("="))
         .map { kv => val Array(k, v) = kv.split("=", 2); (k, v) }
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
-      .config("spark.sql.cbo.enabled", "true")
-      .config("spark.sql.cbo.planStats.enabled", "true")
-      .config("spark.sql.cbo.joinReorder.enabled", "true")
-      .config("spark.sql.extensions", "graft.governance.GraftExtensions")
-      .config("spark.sql.warehouse.dir",
-        new java.io.File("target/spark-warehouse").getAbsolutePath)
-    val spark = extraConf.foldLeft(builder) { case (b, (k, v)) =>
-      b.config(k, v) }.getOrCreate()
+    val spark = extraConf.foldLeft(GraftSession.builder(GraftSession.cpus)) {
+      case (b, (k, v)) => b.config(k, v) }.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val outDir = new java.io.File("target/profile")
     outDir.mkdirs()

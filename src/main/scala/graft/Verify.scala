@@ -1,32 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.ts is TIMESTAMP(NANOS) parquet — read as long, converted in
-      // graft.sources.Tables; keep naive timestamps naive on read so
-      // outputs compare cleanly against the DuckDB oracle.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
-      // cost-based planning posture: stats recorded by ANALYZE feed
-      // Catalyst (join reorder needs row counts on every side)
-      .config("spark.sql.cbo.enabled", "true")
-      .config("spark.sql.cbo.planStats.enabled", "true")
-      .config("spark.sql.cbo.joinReorder.enabled", "true")
-      .config("spark.sql.extensions", "graft.governance.GraftExtensions")
+    val spark = GraftSession.builder(GraftSession.cpus)
       .config("spark.sql.queryExecutionListeners",
         "graft.governance.AuditListener")
-      .config("spark.sql.warehouse.dir",
-        new java.io.File("target/spark-warehouse").getAbsolutePath)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

@@ -211,41 +211,12 @@ object Ann {
     * `max_by`), then one shuffle for the quantized-mean recomputation —
     * the standard distributed Lloyd's step. `iters` is fixed (index
     * build, not convergence-chased); each iteration's centroid frame is
-    * tiny so the driver loop holds only k×dims doubles.
+    * tiny so the driver loop holds only k×dims doubles. Each
+    * iteration's centroids are cut with [[graft.Cut]]; the clustering
+    * is bit-identical in either cut mode.
     */
   def kmeans(emb: DataFrame, idCol: String, vecCol: String, k: Int,
-      iters: Int, checkpointDir: Option[String] = None): DataFrame = {
-    val sc = emb.sparkSession.sparkContext
-    val priorCheckpointDir = sc.getCheckpointDir
-    checkpointDir.foreach(sc.setCheckpointDir(_))
-    try kmeansImpl(emb, idCol, vecCol, k, iters, checkpointDir.isDefined)
-    finally priorCheckpointDir match {
-      case Some(d) => sc.setCheckpointDir(d)
-      // restore "unset" too — leaving the caller's (soon-deleted) dir
-      // installed context-wide would break the session's next unrelated
-      // checkpoint. Option(null) short-circuits the setter to None
-      // without touching the filesystem.
-      case None if checkpointDir.isDefined => sc.setCheckpointDir(null)
-      case None => ()
-    }
-  }
-
-  /** Fault tolerance: by default each iteration cuts lineage with
-    * `localCheckpoint` (executor-resident blocks — fast, right for local
-    * mode), which at cluster scale cannot survive executor loss
-    * mid-build. Pass `checkpointDir` (a reliable shared filesystem path)
-    * to cut lineage with `Dataset.checkpoint` instead — same contract as
-    * [[graft.dedup.Dedup.clusters]], including ownership: Spark never
-    * deletes checkpoint files, so the caller points each run at its own
-    * subdirectory and removes it once the centroids are persisted. The
-    * clustering itself is bit-identical either way (checkpointing only
-    * changes where the cut frames live).
-    */
-  private def kmeansImpl(emb: DataFrame, idCol: String, vecCol: String,
-      k: Int, iters: Int, reliable: Boolean): DataFrame = {
-    def cut(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(eager = true)
-      else df.localCheckpoint(true)
+      iters: Int): DataFrame = {
     graft.functions.GraftFunctions.register(emb.sparkSession)
     val vecs = emb.select(col(idCol).as("vid"), col(vecCol).as("v"))
       .filter(col("v").isNotNull)
@@ -269,7 +240,7 @@ object Ann {
         .join(recomputed, Seq("list"), "left")
         .select(col("list"),
           coalesce(col("new_centroid"), col("centroid")).as("centroid"))
-      cents = cut(cents)
+      cents = graft.Cut(cents)
       i += 1
     }
     cents
@@ -282,16 +253,12 @@ object Ann {
     * formula version).
     */
   def persistedKmeans(emb: DataFrame, idCol: String, vecCol: String,
-      k: Int, iters: Int, path: String,
-      checkpointDir: Option[String] = None): DataFrame = synchronized {
-    // checkpointDir is NOT part of the cache key: it changes where the
-    // training loop's cut frames live, never the centroids (bit-equality
-    // is spec-asserted), so an index built either way is interchangeable
+      k: Int, iters: Int, path: String): DataFrame = synchronized {
     val dir = new java.io.File(
       s"${path}_${idCol}_${vecCol}_k${k}_i${iters}_km2")
     graft.sources.Artifacts.commitOnce(emb.sparkSession,
       dir.getAbsolutePath)(tmp =>
-      kmeans(emb, idCol, vecCol, k, iters, checkpointDir)
+      kmeans(emb, idCol, vecCol, k, iters)
         .write.mode("overwrite").parquet(tmp))
     emb.sparkSession.read.parquet(dir.getAbsolutePath)
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
+import graft.Cut
 import graft.functions.TextFunctions
 
 /** Deduplication operators for training-data pipelines, all expressed as
@@ -228,26 +229,24 @@ object Dedup {
     // contract the old post-aggregate guard enforced, now checked on
     // every occurrence rather than only the winning one).
     // MATERIALIZED with a lineage cut (r21; the clusters/pagerank
-    // localCheckpoint pattern — recomputed from the inputs on every
+    // Cut pattern — recomputed from the inputs on every
     // invocation): the firsts aggregate feeds the signature build,
     // both sides of the banding self-join, the verification shingle
     // sets AND the kept fold — seven plan subtrees that would each
     // re-run the segment explode + firsts aggregate uncut
     // (measured: the uncut plan carried 70 Exchanges).
-    val firsts = segs
+    val firsts = Cut(segs
       .groupBy(col("chunk_text"))
       .agg(min(packFirst(col("_cd_id"), col("chunk_idx"))).as("rep"))
       .select(col("chunk_text"), packedId(col("rep")).as("_f_id"),
-        packedIdx(col("rep")).as("_f_idx"), col("rep"))
-      .localCheckpoint(true)
+        packedIdx(col("rep")).as("_f_idx"), col("rep")))
     // stage 2: banded candidates + exact verification over DISTINCT
     // representatives; a verified pair drops its LATER side. The sig
     // table is cut too — the banding keyed explode and both join-backs
     // consume it, and each would otherwise recompute the k-minhash
     // pass over every distinct segment.
-    val sigs = firsts.select(col("rep").as("doc_id"),
-      minhashSignature(col("chunk_text"), k).as("sig"))
-      .localCheckpoint(true)
+    val sigs = Cut(firsts.select(col("rep").as("doc_id"),
+      minhashSignature(col("chunk_text"), k).as("sig")))
     val dropped = verifyJaccard(
       firsts.select(col("rep"), col("chunk_text")), "rep", "chunk_text",
       minhashCandidatesFromSigs(sigs, k, bands, bucketCap)
@@ -439,19 +438,18 @@ object Dedup {
       textCol: String, seg: Column => Column, sep: String,
       minDocs: Int): DataFrame = {
     // MATERIALIZED with a lineage cut (r22; the clusters/pagerank
-    // localCheckpoint pattern — recomputed from the inputs on every
+    // Cut pattern — recomputed from the inputs on every
     // invocation): BOTH the hot-set aggregate and the left_anti join
     // consume the keys, and uncut each re-ran the segment explode +
     // per-chunk sha256 over the whole corpus. The cut carries
     // (id, chunk_idx, sha256) only — ~48 B per chunk, never text —
     // so it is scale-safe where cutting the segmented corpus itself
     // would not be.
-    val keys = docs
+    val keys = Cut(docs
       .select(col(idCol).as("_cd_id"),
         explode(seg(col(textCol))).as("c"))
       .select(col("_cd_id"), col("c.chunk_idx"),
-        sha2(col("c.chunk_text"), 256).as("h"))
-      .localCheckpoint(true)
+        sha2(col("c.chunk_text"), 256).as("h")))
     val hot = keys.groupBy(col("h"))
       .agg(countDistinct(col("_cd_id")).as("n_docs"))
       .filter(col("n_docs") >= minDocs)
@@ -549,10 +547,9 @@ object Dedup {
       // both consume it, and uncut each would re-run the band-key
       // join + both signature passes (r21 — the check used to cost a
       // full second candidate join per batch)
-      val cand = explodeBands(newSigs, "id_a")
+      val cand = Cut(explodeBands(newSigs, "id_a")
         .join(explodeBands(idx, "id_b"), "bk")
-        .select(col("id_a"), col("id_b")).distinct()
-        .localCheckpoint(true)
+        .select(col("id_a"), col("id_b")).distinct())
       // fail-closed on the corpus contract: a candidate prior-keeper
       // id with no text in `corpus` would silently vanish from the
       // verification join — an under-drop that admits a near-dup.
@@ -866,49 +863,14 @@ object Dedup {
     * anti-join-style changed-row probe — no driver-side graph state; the
     * driver only counts passes.
     *
-    * Fault tolerance: by default the lineage cut is `localCheckpoint`
-    * (blocks live on executors — fast, right for local mode), which at
-    * cluster scale cannot survive executor loss past pass 1. Pass
-    * `checkpointDir` (a reliable shared filesystem path — HDFS/object
-    * store on a real cluster) to cut lineage with `Dataset.checkpoint`
-    * instead: every pass lands durably, and a lost executor recomputes
-    * from the last checkpoint rather than killing the job. That is the
-    * 100 TB form; the extra cost is one FS write per materialization.
-    * Retention contract: Spark does not delete checkpoint files (and
-    * the RETURNED frame still reads the final one), so the CALLER owns
-    * `checkpointDir` — point each run at its own subdirectory and
-    * remove it after the result is consumed or persisted. A
-    * pre-existing SparkContext-global checkpoint location is restored
-    * on exit, so other jobs' checkpoints are not silently redirected;
-    * when NONE existed, the provided dir remains set (Spark has no
-    * public unset) — delete it only once nothing else on the context
-    * checkpoints there.
+    * Each cut is a [[graft.Cut]], so a context checkpoint dir makes
+    * every pass survive executor loss.
     */
-  def clusters(pairs: DataFrame, maxIters: Int = 25,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val sc = pairs.sparkSession.sparkContext
-    val priorCheckpointDir = sc.getCheckpointDir
-    checkpointDir.foreach(sc.setCheckpointDir(_))
-    try clustersImpl(pairs, maxIters, checkpointDir.isDefined)
-    finally priorCheckpointDir match {
-      case Some(d) => sc.setCheckpointDir(d)
-      // restore "unset" too (the Ann.kmeans pattern): leaving the
-      // caller's soon-deleted dir installed context-wide would break
-      // the session's next unrelated checkpoint
-      case None if checkpointDir.isDefined => sc.setCheckpointDir(null)
-      case None => ()
-    }
-  }
-
-  private def clustersImpl(pairs: DataFrame, maxIters: Int,
-      reliable: Boolean): DataFrame = {
-    def cut(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(eager = true)
-      else df.localCheckpoint(true)
+  def clusters(pairs: DataFrame, maxIters: Int = 25): DataFrame = {
     // materialize the incoming pair pipeline ONCE: the symmetric edge
     // union references it twice, and the upstream (LSH + verification)
     // is the expensive part of the whole job — without this it runs twice
-    val p = cut(pairs.select(col("id_a"), col("id_b")))
+    val p = Cut(pairs.select(col("id_a"), col("id_b")))
     // the symmetric edge view stays UNCUT and UNDEDUPLICATED (r22):
     // it is a narrow union+project over the materialized `p` (each
     // pass re-derives it map-side from p's blocks — no shuffle, no
@@ -919,7 +881,7 @@ object Dedup {
     val edgesCut = p
       .select(col("id_a").as("src"), col("id_b").as("dst"))
       .union(p.select(col("id_b").as("src"), col("id_a").as("dst")))
-    var labels = cut(edgesCut.select(col("src").as("id"))
+    var labels = Cut(edgesCut.select(col("src").as("id"))
       .distinct()
       .select(col("id"), col("id").as("cluster_id")))
     var converged = labels.isEmpty
@@ -966,7 +928,7 @@ object Dedup {
       // the fresh neighbor-min, for one fewer shuffle+materialization
       // per pass at any scale. DedupSpec/EntityResolutionSpec pin the
       // labels; the exhaustive closure oracle gates the fixpoint.
-      val next = cut(neighborMin.alias("n")
+      val next = Cut(neighborMin.alias("n")
         .join(labels.select(col("id").as("jid"),
           col("cluster_id").as("jlbl")).alias("j"),
           col("n.mid") === col("j.jid"), "left")

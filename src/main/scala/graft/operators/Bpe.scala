@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Cut
+
 /** Byte-pair-encoding tokenizer training and encoding (Sennrich,
   * Haddow & Birch 2016, "Neural Machine Translation of Rare Words with
   * Subword Units") — the learned-vocabulary twin of the regex token
@@ -90,7 +92,7 @@ object Bpe {
     */
   def train(docs: DataFrame, textCol: String,
       numMerges: Int): (Seq[(Int, String, String)], DataFrame) = {
-    var words = wordTable(docs, textCol).localCheckpoint(true)
+    var words = Cut(wordTable(docs, textCol))
     val merges = scala.collection.mutable.ArrayBuffer[(Int, String, String)]()
     var rank = 0
     var done = false
@@ -111,7 +113,7 @@ object Bpe {
           applyMerge(col("syms"), l, r).as("syms"), col("cnt"))
         // cut lineage like the kmeans loop — each iteration's frame is
         // vocabulary-sized, so the checkpoint is cheap
-        if (rank % 8 == 7) words = words.localCheckpoint(true)
+        if (rank % 8 == 7) words = Cut(words)
         rank += 1
       }
     }

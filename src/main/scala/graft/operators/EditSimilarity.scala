@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
+import graft.Cut
+
 /** Edit-distance similarity SELF-JOIN: all pairs within Levenshtein
   * distance `d` — the string-matching workhorse behind fuzzy entity
   * resolution over a crawl (near-identical titles, URLs, author
@@ -67,16 +69,15 @@ object EditSimilarity {
     // replacing TWO post-candidate join-backs (each a fresh source
     // scan) with one O(strings) join here.
     // the prefix aggregate is MATERIALIZED with a lineage cut (the
-    // clusters/pagerank localCheckpoint pattern — recomputed from the
+    // clusters/pagerank Cut pattern — recomputed from the
     // inputs on every invocation): both sides of the candidate
     // self-join consume it, and uncut each would re-run the gram
     // explode → frequency join → collect pipeline
-    val prefix = grams.join(freq, "g")
+    val prefix = Cut(grams.join(freq, "g")
       .groupBy(col("id"), col("len"))
       .agg(slice(array_sort(collect_list(struct(col("f"), col("g")))),
         1, q * d + 1).as("pfx"))
-      .join(long.select(col("id"), col("s")), "id")
-      .localCheckpoint(true)
+      .join(long.select(col("id"), col("s")), "id"))
       .select(col("id"), col("len"), col("s"),
         explode(col("pfx")).as("e"))
       .select(col("id"), col("len"), col("s"), col("e.g").as("g"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
+import graft.Cut
 import graft.streaming.CdcApply
 
 /** INCREMENTAL fuzzy entity resolution — the continuously-fed form of
@@ -130,7 +131,7 @@ object EntityResolution {
         .write.mode("overwrite").parquet(tmp))
     val freq = spark.read.parquet(freqPath(root))
 
-    val pfx = prefixRows(batch, freq, d, q).localCheckpoint(true)
+    val pfx = Cut(prefixRows(batch, freq, d, q))
 
     // ---- candidate matches against the index ----
     val snapshotOpt = CdcApply.readSnapshot(spark, tablePath(root))
@@ -206,11 +207,10 @@ object EntityResolution {
       .select(col("id_b").as("id_a"), col("ent").as("id_b"))
     val allEdges = innerEdges.unionByName(matchEdges)
     val comp = graft.dedup.Dedup.clusters(allEdges)
-    val assigned = batch
+    val assigned = Cut(batch
       .join(comp, Seq("id"), "left")
       .select(col("id"), col("len"), col("s"),
-        coalesce(col("cluster_id"), col("id")).as("entity_id"))
-      .localCheckpoint(true)
+        coalesce(col("cluster_id"), col("id")).as("entity_id")))
 
     // ---- entity merges FIRST (idempotent; min ids merge-invariant):
     // a prior entity whose id is not its component's minimum rewrites
@@ -224,12 +224,11 @@ object EntityResolution {
     // On re-delivery the merge map recomputes empty against the
     // already-merged index, so the slot goes unused and the replay is
     // a no-op either way. ----
-    val mergeMap = matches.join(comp.withColumnRenamed("id", "id_b"),
+    val mergeMap = Cut(matches.join(comp.withColumnRenamed("id", "id_b"),
         Seq("id_b"))
       .select(col("ent").as("ent_from"), col("cluster_id").as("ent_to"))
       .filter(col("ent_from") =!= col("ent_to"))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct())
     if (!mergeMap.isEmpty) {
       val snap = CdcApply.readSnapshot(spark, tablePath(root)).get
       val diff = snap

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
+import graft.Cut
+
 /** Distributed PageRank (Page et al. 1999) in EXACT integer
   * arithmetic, so a fixed-iteration run is bit-identical on every
   * engine, partitioning and run — the floating-point formulation is
@@ -39,17 +41,14 @@ import org.apache.spark.sql.types.LongType
   * inbound sum stays below 2^63/num as long as in-degree × scale <
   * 1e17 — i.e. in-degrees up to ~1e8 at the default scale.
   *
-  * Lineage cuts ([[graft.dedup.Dedup.clusters]]'s pattern —
-  * `localCheckpoint` by default, `Dataset.checkpoint` into
-  * `checkpointDir` for the executor-loss-safe cluster form) land every
-  * `cutEvery` iterations rather than every iteration (r21): each rank
+  * Lineage cuts ([[graft.Cut]], which picks local or reliable) land
+  * every `cutEvery` iterations rather than every iteration (r21): each rank
   * reference is linear (used once by the next iteration), so an uncut
   * stretch executes exactly once at the next materialization — the cut
   * only bounds PLAN depth and recompute-on-executor-loss, while each
   * eager cut costs a full materialization job. Short runs between cuts
   * therefore execute as one job; a failure replays at most `cutEvery`
-  * iterations. Caller owns `checkpointDir` (same retention contract as
-  * clusters).
+  * iterations.
   */
 object PageRank {
 
@@ -59,33 +58,11 @@ object PageRank {
     */
   def run(edges: DataFrame, iters: Int, scale: Long = 1000000000L,
       dampNum: Long = 85, dampDen: Long = 100,
-      checkpointDir: Option[String] = None,
       cutEvery: Int = 1): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(dampNum > 0 && dampNum < dampDen,
       s"damping must satisfy 0 < num < den, got $dampNum/$dampDen")
     require(cutEvery >= 1, s"cutEvery must be >= 1, got $cutEvery")
-    val sc = edges.sparkSession.sparkContext
-    val prior = sc.getCheckpointDir
-    checkpointDir.foreach(sc.setCheckpointDir(_))
-    try runImpl(edges, iters, scale, dampNum, dampDen,
-      checkpointDir.isDefined, cutEvery)
-    finally prior match {
-      case Some(d) => sc.setCheckpointDir(d)
-      // restore "unset" too (the Ann.kmeans pattern): leaving the
-      // caller's soon-deleted dir installed context-wide would break
-      // the session's next unrelated checkpoint
-      case None if checkpointDir.isDefined => sc.setCheckpointDir(null)
-      case None => ()
-    }
-  }
-
-  private def runImpl(edges: DataFrame, iters: Int, scale: Long,
-      dampNum: Long, dampDen: Long, reliable: Boolean,
-      cutEvery: Int): DataFrame = {
-    def cut(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(eager = true)
-      else df.localCheckpoint(true)
     // loop INVARIANTS (r22 shape): the edge list materializes as
     // (src, dst) ONLY and the degrees live in a separate one-row-per-
     // node table derived from it — the r21 form carried outdeg on
@@ -96,8 +73,8 @@ object PageRank {
     // attaches to the edges in one equi-join (broadcast under AQE),
     // so the big table is never joined twice — contributions are
     // unchanged (the same integer quotient per src rides every edge).
-    val edgesCut = cut(edges.select(col("src"), col("dst")))
-    val deg = cut(edgesCut.groupBy(col("src"))
+    val edgesCut = Cut(edges.select(col("src"), col("dst")))
+    val deg = Cut(edgesCut.groupBy(col("src"))
       .agg(count(lit(1)).cast(LongType).as("outdeg")))
     val nodes = deg.select(col("src").as("id"))
     val base = (dampDen - dampNum) * scale
@@ -129,7 +106,7 @@ object PageRank {
             s"div ${dampDen}L").as("rank"))
       // the final iteration never cuts — the caller's action is its
       // materialization; intermediate cuts land on the interval
-      ranks = if (i < iters && i % cutEvery == 0) cut(next) else next
+      ranks = if (i < iters && i % cutEvery == 0) Cut(next) else next
     }
     ranks
   }

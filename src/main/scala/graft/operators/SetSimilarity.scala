@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
+import graft.Cut
 import graft.sources.Tables
 
 /** EXACT Jaccard set-similarity SELF-JOIN — the lossless complement
@@ -87,15 +88,14 @@ object SetSimilarity {
     // verification arrays below, so the tokenize/shingle pipeline is
     // evaluated once, not once per consumer (r21). The aggregate is
     // MATERIALIZED with a lineage cut (the clusters/pagerank
-    // localCheckpoint pattern — recomputed from the parquet inputs on
+    // Cut pattern — recomputed from the parquet inputs on
     // every invocation, never across runs): four plan subtrees
     // consume it (prefix self-join ×2, verify sets ×2), and uncut
     // each would re-run the tokenize → frequency-join → collect
     // pipeline.
-    val ranked = toks.join(rankTbl, "tok")
+    val ranked = Cut(toks.join(rankTbl, "tok")
       .groupBy(col("id"), col("sz"))
-      .agg(sort_array(collect_list(col("r"))).as("ranked"))
-      .localCheckpoint(true)
+      .agg(sort_array(collect_list(col("r"))).as("ranked")))
     // prefix = the sz - ceil(t*sz) + 1 globally-rarest tokens.
     // posexplode keeps each prefix token's POSITION in the record's
     // full frequency-sorted token list (a prefix IS that list's head,

@@ -176,28 +176,12 @@ class AnnSpec extends AnyFunSuite with SparkTestBase {
         .map(r => r.getInt(0) -> r.getSeq[Any](1).toList).toMap
     val local = canon(Ann.kmeans(df, "vec_id", "embedding", k = 4,
       iters = 3))
-    // a pre-existing context-global checkpoint location must survive
-    val prior = java.nio.file.Files
-      .createTempDirectory("prior_ckpt").toFile.getAbsolutePath
-    spark.sparkContext.setCheckpointDir(prior)
-    val reliable = canon(Ann.kmeans(df, "vec_id", "embedding", k = 4,
-      iters = 3, checkpointDir = Some(ckpt)))
+    val reliable = withCheckpointDir(ckpt)(canon(Ann.kmeans(df, "vec_id",
+      "embedding", k = 4, iters = 3)))
     // the checkpoint mode changes fault tolerance, never the centroids
     assert(reliable == local)
     // and the reliable run actually wrote durable checkpoints
-    val wrote = new java.io.File(ckpt).listFiles
-    assert(wrote != null && wrote.nonEmpty, "no reliable checkpoint written")
-    // the prior context-global checkpoint location was restored
-    assert(spark.sparkContext.getCheckpointDir.exists(_.contains(
-      new java.io.File(prior).getName)))
-    // and an UNSET prior location is restored to unset — not left
-    // pointing at the caller's (deletable) kmeans dir
-    spark.sparkContext.setCheckpointDir(null)
-    assert(spark.sparkContext.getCheckpointDir.isEmpty)
-    Ann.kmeans(df, "vec_id", "embedding", k = 4, iters = 2,
-      checkpointDir = Some(ckpt))
-    assert(spark.sparkContext.getCheckpointDir.isEmpty,
-      s"leaked checkpoint dir: ${spark.sparkContext.getCheckpointDir}")
+    assert(wroteCheckpoints(ckpt), "no reliable checkpoint written")
   }
 
   test("kmeans keeps k centroids when a list captures no vectors") {

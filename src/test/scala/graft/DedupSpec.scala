@@ -180,36 +180,58 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
       s"near pair too distant: $out")
   }
 
+  private def labels(clustered: DataFrame): Map[Long, Long] =
+    clustered.collect()
+      .map(r => r.getAs[Long]("id") -> r.getAs[Long]("cluster_id")).toMap
+
   test("clusters: min-label components over pair edges, incl. chains") {
     import spark.implicits._
     // components: {1,2,3,9} (chain through 9), {5,7}, {10..13} (path) —
     // the path exercises multi-pass propagation + pointer-jumping
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 9L), (5L, 7L),
       (10L, 11L), (11L, 12L), (12L, 13L)).toDF("id_a", "id_b")
-    val out = Dedup.clusters(pairs).collect()
-      .map(r => r.getAs[Long]("id") -> r.getAs[Long]("cluster_id")).toMap
+    val out = labels(Dedup.clusters(pairs))
     assert(out == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 9L -> 1L,
       5L -> 5L, 7L -> 5L, 10L -> 10L, 11L -> 10L, 12L -> 10L, 13L -> 10L))
   }
 
   test("clusters via a reliable checkpoint dir match the local path") {
     import spark.implicits._
-    // cluster-scale fault tolerance: with checkpointDir set, lineage cuts
-    // go through Dataset.checkpoint to a durable dir instead of
-    // executor-resident localCheckpoint blocks; results must be identical
+    // cluster-scale fault tolerance: with a context checkpoint dir set,
+    // every Cut goes through Dataset.checkpoint to a durable dir instead
+    // of executor-resident localCheckpoint blocks; results must be identical
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (11L, 12L))
       .toDF("id_a", "id_b")
     val dir = java.nio.file.Files
       .createTempDirectory("graft_ckpt").toFile.getAbsolutePath
-    val reliable = Dedup.clusters(pairs, checkpointDir = Some(dir))
-      .collect()
-      .map(r => r.getAs[Long]("id") -> r.getAs[Long]("cluster_id")).toMap
-    val local = Dedup.clusters(pairs).collect()
-      .map(r => r.getAs[Long]("id") -> r.getAs[Long]("cluster_id")).toMap
+    val reliable = withCheckpointDir(dir)(labels(Dedup.clusters(pairs)))
+    val local = labels(Dedup.clusters(pairs))
     assert(reliable == local)
-    assert(new java.io.File(dir).listFiles != null &&
-      new java.io.File(dir).listFiles.nonEmpty,
-      "reliable path wrote no checkpoint data")
+    assert(wroteCheckpoints(dir), "reliable path wrote no checkpoint data")
+  }
+
+  test("clusters: losing the cut blocks fails a local run, not a reliable one") {
+    import spark.implicits._
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 9L), (5L, 7L),
+      (10L, 11L), (11L, 12L), (12L, 13L)).toDF("id_a", "id_b")
+    val sc = spark.sparkContext
+    // an executor loss, injected: unpersist exactly the RDDs `clusters`
+    // added (its local cut blocks), never other suites' caches
+    def clustersThenDropCuts(): DataFrame = {
+      val before = sc.getPersistentRDDs.keySet
+      val out = Dedup.clusters(pairs)
+      sc.getPersistentRDDs.foreach { case (id, rdd) =>
+        if (!before(id)) rdd.unpersist(blocking = true) }
+      out
+    }
+    val undisturbed = labels(Dedup.clusters(pairs))
+    val lost = clustersThenDropCuts()
+    val e = intercept[org.apache.spark.SparkException](lost.collect())
+    assert(e.getMessage.contains("CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"))
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_ckpt").toFile.getAbsolutePath
+    val survived = withCheckpointDir(dir)(labels(clustersThenDropCuts()))
+    assert(survived == undisturbed)
   }
 
   test("clusters of an empty pair set: every doc keeps itself") {

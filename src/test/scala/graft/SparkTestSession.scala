@@ -3,25 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared SparkSession for the whole test JVM (suites run
-  * sequentially), configured identically to the Verify/Bench sessions:
-  * governance extension installed, audit listener registered, UTC, NTZ
-  * parquet handling.
+  * sequentially), built like the Verify/Bench sessions
+  * ([[GraftSession]]) at 4 cores, with its own warehouse and the audit
+  * listener registered.
   */
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
-      // cost-based planning posture: stats recorded by ANALYZE feed
-      // Catalyst (join reorder needs row counts on every side)
-      .config("spark.sql.cbo.enabled", "true")
-      .config("spark.sql.cbo.planStats.enabled", "true")
-      .config("spark.sql.cbo.joinReorder.enabled", "true")
-      .config("spark.sql.extensions", "graft.governance.GraftExtensions")
+    val s = GraftSession.builder(4)
       // per-JVM warehouse: test suites run in several concurrently
       // forked JVMs (build.sbt testGrouping); a shared warehouse would
       // let one JVM's catalog DDL delete files another JVM reads
@@ -41,4 +29,20 @@ object SparkTestSession {
 trait SparkTestBase {
   lazy val spark: SparkSession = SparkTestSession.spark
   def sfDir: String = SparkTestSession.sfDir
+
+  /** Runs `body` with `dir` as the context checkpoint dir, so every
+    * [[Cut]] inside it is reliable; unsets the dir afterwards, so later
+    * suites in the same JVM cut locally again.
+    */
+  def withCheckpointDir[T](dir: String)(body: => T): T = {
+    spark.sparkContext.setCheckpointDir(dir)
+    try body finally spark.sparkContext.setCheckpointDir(null)
+  }
+
+  /** True when a reliable checkpoint (an `rdd-<id>` dir) landed under `dir`. */
+  def wroteCheckpoints(dir: String): Boolean = {
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+    try walk.anyMatch(_.getFileName.toString.startsWith("rdd-"))
+    finally walk.close()
+  }
 }
