@@ -45,7 +45,6 @@ object Ann {
     require(queryVec.columns.length == 1,
       s"queryVec must have exactly one (vector) column, " +
         s"got ${queryVec.columns.mkString(",")}")
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     emb.filter(col(idCol) =!= queryId)
       .select(col(idCol), col(vecCol).as("ev"))
       .crossJoin(broadcast(queryVec.toDF("qv")))
@@ -217,7 +216,6 @@ object Ann {
     */
   def kmeans(emb: DataFrame, idCol: String, vecCol: String, k: Int,
       iters: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val vecs = emb.select(col(idCol).as("vid"), col(vecCol).as("v"))
       .filter(col("v").isNotNull)
     var cents = vecs.orderBy(col("vid")).limit(k)
@@ -530,7 +528,6 @@ object Ann {
     */
   def semanticDedup(emb: DataFrame, idCol: String, vecCol: String,
       listCol: String, tau: Double): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     Seq("_la", "_lb", "_ka", "_kb", "_va", "_vb", "_na", "_nb")
       .foreach(c => require(!emb.columns.contains(c),
         s"input must not carry the reserved column '$c'"))
@@ -587,7 +584,6 @@ object Ann {
   def lshNearDupPairs(emb: DataFrame, idCol: String, vecCol: String,
       bits: Int, dims: Int = 64,
       bucketCap: Int = graft.dedup.Dedup.DefaultBucketCap): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val vecs = emb.select(col(idCol).as("vid"), col(vecCol).as("v"))
     // null vectors hash to a null bucket; groupBy would treat null as a
     // real grouping key and pair all null-vector rows with each other
@@ -625,7 +621,6 @@ object Ann {
     */
   def hardNegatives(emb: DataFrame, idCol: String, labelCol: String,
       vecCol: String, anchors: DataFrame, k: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val a = anchors.select(col(idCol).as("anchor_id"),
       col(labelCol).as("anchor_label"), col(vecCol).as("anchor_vec"))
     // corpus side scan-spread (guide §2.5; no-op at production file

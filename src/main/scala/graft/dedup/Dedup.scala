@@ -204,7 +204,6 @@ object Dedup {
   def paragraphNearDup(docs: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.8, k: Int = 32, bands: Int = 16,
       bucketCap: Int = DefaultBucketCap): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     // the representative long encodes corpus order as id*2^20 + idx —
     // a non-integral id would silently coerce to double arithmetic
     // and lose ordering precision past 2^52; refuse instead
@@ -515,7 +514,6 @@ object Dedup {
     require(k % bands == 0, "bands must divide k")
     import graft.streaming.CdcApply
     val spark = batch.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     val rowsPerBand = k / bands
     // the batch's signature pass is window-dense map work — spread it
     // when the batch arrives as an under-split file (guide §2.5;
@@ -654,8 +652,8 @@ object Dedup {
     * are computed ONCE per row and update all k running minima in a single
     * pass. (The higher-order-function formulation — k separate
     * `array_min(transform(...))` — re-evaluates the shingle array per
-    * component and is interpreted, ~30× slower.) Callers must have run
-    * `GraftFunctions.register` on the session.
+    * component and is interpreted, ~30× slower.) The function comes
+    * with `GraftExtensions`.
     */
   def minhashSignature(text: Column, k: Int): Column =
     graft.functions.GraftFunctions
@@ -687,7 +685,6 @@ object Dedup {
   def minhashCandidates(docs: DataFrame, idCol: String, textCol: String,
       k: Int = 32, bands: Int = 8,
       bucketCap: Int = DefaultBucketCap): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     minhashCandidatesFromSigs(
       spreadDocs(docs, idCol, textCol)
         .select(col("_cd_id").as("doc_id"),
@@ -704,7 +701,6 @@ object Dedup {
     */
   def persistedSignatures(docs: DataFrame, idCol: String, textCol: String,
       k: Int, path: String): DataFrame = synchronized {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     // every parameter that changes the signature is part of the cache
     // key: a stale index with a different k would make band slicing read
     // past the array (identical empty-slice keys for every doc), and one
@@ -775,7 +771,6 @@ object Dedup {
     */
   def verifyJaccard(docs: DataFrame, idCol: String, textCol: String,
       pairs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val candIds = pairs
       .select(explode(array(col("id_a"), col("id_b"))).as("cand_id"))
       .distinct()
@@ -1025,7 +1020,6 @@ object Dedup {
   def simhashCandidates(docs: DataFrame, idCol: String, textCol: String,
       chunkBits: Int = 16,
       bucketCap: Int = DefaultBucketCap): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     hammingCandidates(
       docs.select(col(idCol).as("doc_id"),
         graft.functions.GraftFunctions

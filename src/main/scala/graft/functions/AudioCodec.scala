@@ -1,11 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType, IntegerType, LongType, StructField, StructType}
 
-/** Real audio codec expressions over binary payload columns — the
+/* Real audio codec expressions over binary payload columns — the
   * audio sibling of [[ImageCodec]] (reference
   * `generate_sample_data.py` ships only tabular data; a training-data
   * lake carries media sidecars). WAV/PCM is pure-JDK
@@ -21,17 +20,6 @@ import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType, IntegerType
   * 100 TB the decode is embarrassingly parallel map-side work over an
   * ordinary binary column — no shuffle, no special-cased dataflow.
   */
-object AudioCodec {
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "wav_encode",
-      (es: Seq[Expression]) => WavEncode(es.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "wav_decode",
-      (es: Seq[Expression]) => WavDecode(es.head), "scala_udf")
-  }
-}
 
 /** Deterministic mono PCM16 WAV from a long seed: the sample count
   * derives from the seed ([[WavEncode.nSamplesOf]], 200–1000 samples

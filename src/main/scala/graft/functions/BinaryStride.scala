@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{BinaryType, DataType}
@@ -38,18 +37,5 @@ object BinaryStride {
     var i = 0
     while (i < n) { out(i) = bytes(i * factor); i += 1 }
     out
-  }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "binary_stride",
-      (es: Seq[Expression]) => BinaryStride(es.head, intOf(es(1))),
-      "scala_udf")
-
-  private def intOf(e: Expression): Int = e.eval() match {
-    case i: Int  => i
-    case l: Long => l.toInt
-    case other =>
-      throw new IllegalArgumentException(s"expected int literal, got $other")
   }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -61,11 +60,4 @@ object BloomBitsSet {
     }
     true
   }
-
-  /** Register `bloom_bits_set(mask, positions) -> boolean` (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_bits_set",
-      (exprs: Seq[Expression]) =>
-        BloomBitsSet(exprs.head, exprs(1)), "scala_udf")
 }

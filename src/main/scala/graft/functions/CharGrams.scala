@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -89,10 +88,4 @@ object CharGrams {
     }
     new GenericArrayData(out)
   }
-
-  /** Register `char_grams(string) -> array<string>` (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "char_grams",
-      (exprs: Seq[Expression]) => CharGrams(exprs.head), "scala_udf")
 }

@@ -1,18 +1,14 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import scala.reflect.{classTag, ClassTag}
+
+import org.apache.spark.sql.{AnalysisException, Column}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.functions.call_function
 
-/** Column-level entry points for graft's custom Catalyst expressions, plus
-  * session registration so they are callable from SQL text. Resolution goes
-  * through the session function registry (`call_function`), so
-  * [[register]] must have run on the session first. Sessions built with
-  * `graft.governance.GraftExtensions` get this automatically (the
-  * extension registers on analyzer construction); for any other session,
-  * call [[register]] once up front — otherwise every helper here fails at
-  * analysis time with UNRESOLVED_ROUTINE naming the missing function.
-  * Query builders in `graft.queries` / `graft.dedup` also register
-  * defensively for extension-less sessions.
+/** Column-level entry points for graft's custom Catalyst expressions;
+  * the SQL functions they call come with `graft.governance.GraftExtensions`.
   */
 object GraftFunctions {
 
@@ -125,22 +121,58 @@ object GraftFunctions {
   def stripAccents(text: Column): Column =
     call_function("strip_accents", text)
 
-  /** Register all graft SQL functions on a session (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    SimHash.register(spark)
-    MinHashSig.register(spark)
-    VectorExprs.register(spark)
-    BinaryStride.register(spark)
-    Shingles.register(spark)
-    WsTokens.register(spark)
-    RankedIntersectCount.register(spark)
-    BloomBitsSet.register(spark)
-    CharGrams.register(spark)
-    GramRepStats.register(spark)
-    ImageCodec.register(spark)
-    AudioCodec.register(spark)
-    VideoCodec.register(spark)
-    PerceptualHash.register(spark)
-    UnicodeNorm.register(spark)
-  }
+  /** Every graft SQL function, for `GraftExtensions` to inject (the
+    * `CdcSql.tableFunctions` pattern). Spark copies the injected registry
+    * into each session, `newSession()` children included; the functions
+    * stay session-scoped, not builtins.
+    */
+  private[graft] val functions: Seq[(FunctionIdentifier, ExpressionInfo,
+      Seq[Expression] => Expression)] = Seq(
+    fn("simhash64")(es => SimHash(es.head)),
+    fn("minhash32")(es => MinHashSig(es.head,
+      intArg("minhash32", "shingleSize", es(1)),
+      intArg("minhash32", "k", es(2)))),
+    fn("cosine_quant")(es => CosineQuant(es(0), es(1))),
+    fn("hplane_bucket")(es => HyperplaneBucket(es(0),
+      intArg("hplane_bucket", "bits", es(1)),
+      intArg("hplane_bucket", "dims", es(2)))),
+    fn("binary_stride")(es =>
+      BinaryStride(es.head, intArg("binary_stride", "factor", es(1)))),
+    fn("shingles")(es => Shingles(es.head, intArg("shingles", "n", es(1)))),
+    fn("ws_tokens")(es => WsTokens(es.head)),
+    fn("ranked_intersect_count")(es => RankedIntersectCount(es(0), es(1))),
+    fn("char_grams")(es => CharGrams(es.head)),
+    fn("bloom_bits_set")(es => BloomBitsSet(es(0), es(1))),
+    fn("gram_rep_stats")(es => GramRepStats(es.head)),
+    fn("png_encode")(es => PngEncode(es.head)),
+    fn("image_decode")(es => ImageDecode(es.head)),
+    fn("wav_encode")(es => WavEncode(es.head)),
+    fn("wav_decode")(es => WavDecode(es.head)),
+    fn("avi_encode")(es => AviEncode(es.head)),
+    fn("avi_decode")(es => AviDecode(es.head)),
+    fn("dhash64")(es => DHash64(es.head)),
+    fn("png_perturb")(es => PngPerturb(es(0), es(1))),
+    fn("audio_fp64")(es => AudioFp64(es.head)),
+    fn("wav_perturb")(es => WavPerturb(es(0), es(1))),
+    fn("nfc_normalize")(es => NfcNormalize(es.head)),
+    fn("strip_accents")(es => StripAccents(es.head)))
+
+  private def fn[E <: Expression: ClassTag](name: String)(
+      build: Seq[Expression] => E)
+      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
+    (FunctionIdentifier(name),
+      new ExpressionInfo(classTag[E].runtimeClass.getName, name), build)
+
+  /** The value of `fn`'s int-literal argument `arg` (an Int or Long
+    * constant); anything else fails analysis naming both.
+    */
+  private def intArg(fn: String, arg: String, e: Expression): Int =
+    (if (e.foldable) e.eval() else null) match {
+      case i: Int  => i
+      case l: Long => l.toInt
+      case _ => throw new AnalysisException(
+        "INVALID_PARAMETER_VALUE.INTEGER",
+        Map("parameter" -> s"`$arg`", "functionName" -> s"`$fn`",
+          "invalidValue" -> e.sql))
+    }
 }

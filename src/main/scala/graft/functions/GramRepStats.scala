@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -154,10 +153,4 @@ object GramRepStats {
     new GenericInternalRow(Array[Any](distinct.size.toLong, maxBg,
       tri.size.toLong))
   }
-
-  /** Register `gram_rep_stats(array<string>)` (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "gram_rep_stats",
-      (exprs: Seq[Expression]) => GramRepStats(exprs.head), "scala_udf")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType, IntegerType, StructField, StructType}
@@ -27,16 +26,23 @@ object ImageCodec {
   // create+delete per decoded payload (r21, measured: the dominant
   // non-CPU cost of the perceptual/codec paths). Byte-array payloads
   // gain nothing from a disk cache; memory-backed streams remove both
-  // the I/O and the contention. JVM-global, idempotent.
+  // the I/O and the contention. JVM-global, idempotent; every ImageIO
+  // call in graft goes through this object, so the setting is in place
+  // on whichever JVM decodes.
   javax.imageio.ImageIO.setUseCache(false)
 
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "png_encode",
-      (es: Seq[Expression]) => PngEncode(es.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "image_decode",
-      (es: Seq[Expression]) => ImageDecode(es.head), "scala_udf")
+  /** The decoded image, or null when the bytes are not a decodable image. */
+  def read(bytes: Array[Byte]): java.awt.image.BufferedImage =
+    try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
+    catch { case _: java.io.IOException => null }
+
+  /** `img` encoded as `format` ("png", "jpg"). */
+  def write(img: java.awt.image.RenderedImage, format: String)
+      : Array[Byte] = {
+    val bos = new java.io.ByteArrayOutputStream()
+    if (!javax.imageio.ImageIO.write(img, format, bos))
+      throw new IllegalStateException(s"JDK $format writer unavailable")
+    bos.toByteArray
   }
 }
 
@@ -94,10 +100,7 @@ object PngEncode {
       }
       y += 1
     }
-    val bos = new java.io.ByteArrayOutputStream()
-    if (!javax.imageio.ImageIO.write(img, "png", bos))
-      throw new IllegalStateException("JDK PNG writer unavailable")
-    bos.toByteArray
+    ImageCodec.write(img, "png")
   }
 }
 
@@ -140,10 +143,7 @@ object ImageDecode {
     */
   def compute(bytes: Array[Byte])
       : org.apache.spark.sql.catalyst.InternalRow = {
-    val img =
-      try javax.imageio.ImageIO.read(
-        new java.io.ByteArrayInputStream(bytes))
-      catch { case _: java.io.IOException => null }
+    val img = ImageCodec.read(bytes)
     if (img == null) return null
     val w = img.getWidth
     val h = img.getHeight

@@ -2,7 +2,6 @@ package graft.functions
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -123,22 +122,5 @@ object MinHashSig {
       }
     }
     new GenericArrayData(sig)
-  }
-
-  /** Register `minhash32(array<string>, shingleSize, k) -> array<bigint>`
-    * in the session function registry (idempotent).
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash32",
-      (exprs: Seq[Expression]) =>
-        MinHashSig(exprs.head, intArg(exprs(1)), intArg(exprs(2))),
-      "scala_udf")
-
-  private def intArg(e: Expression): Int = e.eval() match {
-    case i: Int  => i
-    case l: Long => l.toInt
-    case other =>
-      throw new IllegalArgumentException(s"expected int literal, got $other")
   }
 }

@@ -1,11 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
 
-/** Perceptual image hashing over binary payload columns — the image
+/* Perceptual image hashing over binary payload columns — the image
   * half of multimodal near-dup dedup (a re-encoded, resized or
   * slightly-retouched crawl image shares no bytes with its original,
   * so `xxhash64(payload)` exact-dup detection misses it; a perceptual
@@ -33,31 +32,6 @@ import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
   * dispatched from generated code — map-side, inside WholeStageCodegen,
   * embarrassingly parallel at 100 TB.
   */
-object PerceptualHash {
-
-  // ImageIO's default useCache=true spools EVERY read/write through a
-  // temp disk-cache file created under a process-global lock — one file
-  // create+delete per decoded payload (r21, measured: the dominant
-  // non-CPU cost of the perceptual/codec paths). Byte-array payloads
-  // gain nothing from a disk cache; memory-backed streams remove both
-  // the I/O and the contention. JVM-global, idempotent.
-  javax.imageio.ImageIO.setUseCache(false)
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dhash64",
-      (es: Seq[Expression]) => DHash64(es.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "png_perturb",
-      (es: Seq[Expression]) => PngPerturb(es(0), es(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "audio_fp64",
-      (es: Seq[Expression]) => AudioFp64(es.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "wav_perturb",
-      (es: Seq[Expression]) => WavPerturb(es(0), es(1)), "scala_udf")
-  }
-}
 
 /** 64-bit perceptual difference hash of an image payload; NULL when the
   * bytes are not a decodable image (mixed media tables hash in one
@@ -99,10 +73,7 @@ object DHash64 {
     * Returns null for undecodable bytes or degenerate (sub-2×2) images.
     */
   def compute(bytes: Array[Byte]): java.lang.Long = {
-    val img =
-      try javax.imageio.ImageIO.read(
-        new java.io.ByteArrayInputStream(bytes))
-      catch { case _: java.io.IOException => null }
+    val img = ImageCodec.read(bytes)
     if (img == null) return null
     val w = img.getWidth
     val h = img.getHeight
@@ -320,10 +291,7 @@ object PngPerturb {
 
   /** Called from generated code; must stay public + static-shaped. */
   def compute(bytes: Array[Byte], seed: Long): Array[Byte] = {
-    val img =
-      try javax.imageio.ImageIO.read(
-        new java.io.ByteArrayInputStream(bytes))
-      catch { case _: java.io.IOException => null }
+    val img = ImageCodec.read(bytes)
     if (img == null) return null
     val w = img.getWidth
     val h = img.getHeight
@@ -335,9 +303,6 @@ object PngPerturb {
       img.setRGB(x, y, img.getRGB(x, y) ^ 0x010101)
       i += 1
     }
-    val bos = new java.io.ByteArrayOutputStream()
-    if (!javax.imageio.ImageIO.write(img, "png", bos))
-      throw new IllegalStateException("JDK PNG writer unavailable")
-    bos.toByteArray
+    ImageCodec.write(img, "png")
   }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -126,11 +125,4 @@ object RankedIntersectCount {
     }
     cnt
   }
-
-  /** Register `ranked_intersect_count(a, b) -> bigint` (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ranked_intersect_count",
-      (exprs: Seq[Expression]) =>
-        RankedIntersectCount(exprs.head, exprs(1)), "scala_udf")
 }

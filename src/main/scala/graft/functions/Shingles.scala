@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -91,16 +90,4 @@ object Shingles {
       new GenericArrayData(out)
     }
   }
-
-  /** Register `shingles(array<string>, n) -> array<string>` (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingles",
-      (exprs: Seq[Expression]) => Shingles(exprs.head, exprs(1).eval() match {
-        case i: Int  => i
-        case l: Long => l.toInt
-        case other => throw new IllegalArgumentException(
-          s"expected int literal shingle size, got $other")
-      }),
-      "scala_udf")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -72,12 +71,4 @@ object SimHash {
     }
     out
   }
-
-  /** Register `simhash64(array<string>) -> bigint` in the session's
-    * function registry (idempotent), so it is usable from SQL text and via
-    * `expr("simhash64(...)")`.
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64", (exprs: Seq[Expression]) => SimHash(exprs.head), "scala_udf")
 }

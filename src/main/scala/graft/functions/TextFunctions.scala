@@ -17,9 +17,7 @@ object TextFunctions {
     * builtin `filter(split(trim(text), "\\s+"), t => t =!= "")` chain it
     * replaces (WsTokensSpec pins the equivalence), without that chain's
     * per-row `Pattern.compile` + UTF-16 round-trip + interpreted filter
-    * lambda. Callers must have run `GraftFunctions.register` on the
-    * session (sessions with `GraftExtensions` get it automatically; the
-    * operator entry points register defensively).
+    * lambda. The function comes with `GraftExtensions`.
     */
   def tokens(text: Column): Column = GraftFunctions.wsTokens(text)
 
@@ -177,9 +175,7 @@ object TextFunctions {
   /** `n`-word shingles, the unit for MinHash/Jaccard near-dup detection —
     * the codegen'd [[Shingles]] kernel (the higher-order formulation is
     * interpreted and re-evaluates the token split per branch, ~50×
-    * slower on a corpus scan). Callers must have run
-    * `GraftFunctions.register` on the session (the operator entry points
-    * in `graft.dedup` / `graft.queries` do).
+    * slower on a corpus scan). The function comes with `GraftExtensions`.
     */
   def shingles(text: Column, n: Int): Column =
     GraftFunctions.shingles(tokens(text), n)

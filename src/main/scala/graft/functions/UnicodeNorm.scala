@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
@@ -28,15 +27,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * strings, the overwhelmingly common case in a large corpus.
   */
 object UnicodeNorm {
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nfc_normalize",
-      (es: Seq[Expression]) => NfcNormalize(es.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "strip_accents",
-      (es: Seq[Expression]) => StripAccents(es.head), "scala_udf")
-  }
 
   /** ASCII fast path: normalization is the identity on ASCII, and a
     * byte scan is far cheaper than a Normalizer pass.

@@ -3,7 +3,6 @@ package graft.functions
 import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -166,24 +165,4 @@ case class HyperplaneBucket(child: Expression, bits: Int, dims: Int)
 
   override protected def withNewChildInternal(
       newChild: Expression): HyperplaneBucket = copy(child = newChild)
-}
-
-object VectorExprs {
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_quant",
-      (es: Seq[Expression]) => CosineQuant(es(0), es(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hplane_bucket",
-      (es: Seq[Expression]) =>
-        HyperplaneBucket(es(0), intOf(es(1)), intOf(es(2))), "scala_udf")
-  }
-
-  private def intOf(e: Expression): Int = e.eval() match {
-    case i: Int  => i
-    case l: Long => l.toInt
-    case other =>
-      throw new IllegalArgumentException(s"expected int literal, got $other")
-  }
 }

@@ -1,12 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType, IntegerType, StructField, StructType}
 
-/** Real video codec expressions over binary payload columns — the last
-  * member of the [[ImageCodec]]/[[AudioCodec]] family. The container
+/* Real video codec expressions over binary payload columns — the last
+  * member of the [[ImageCodec]]/`AudioCodec.scala` family. The container
   * is AVI (the public Microsoft RIFF spec: `RIFF('AVI ')` with an
   * `hdrl` header list and a `movi` list of `00dc` frame chunks) and
   * the frames are MJPEG — every frame a complete JPEG — so BOTH
@@ -22,25 +21,6 @@ import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType, IntegerType
   * embarrassingly parallel map-side work over an ordinary binary
   * column — no shuffle, no special-cased dataflow.
   */
-object VideoCodec {
-
-  // ImageIO's default useCache=true spools EVERY read/write through a
-  // temp disk-cache file created under a process-global lock — one file
-  // create+delete per decoded payload (r21, measured: the dominant
-  // non-CPU cost of the perceptual/codec paths). Byte-array payloads
-  // gain nothing from a disk cache; memory-backed streams remove both
-  // the I/O and the contention. JVM-global, idempotent.
-  javax.imageio.ImageIO.setUseCache(false)
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "avi_encode",
-      (es: Seq[Expression]) => AviEncode(es.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "avi_decode",
-      (es: Seq[Expression]) => AviDecode(es.head), "scala_udf")
-  }
-}
 
 /** Deterministic tiny MJPEG-in-AVI clip from a long seed: frame count
   * and dimensions derive from the seed ([[AviEncode.nFramesOf]] /
@@ -106,10 +86,7 @@ object AviEncode {
       }
       y += 1
     }
-    val bos = new java.io.ByteArrayOutputStream()
-    if (!javax.imageio.ImageIO.write(img, "jpg", bos))
-      throw new IllegalStateException("JDK JPEG writer unavailable")
-    bos.toByteArray
+    ImageCodec.write(img, "jpg")
   }
 
   /** Called from generated code; must stay public + static-shaped. */
@@ -230,10 +207,7 @@ object AviDecode {
         } else if (id.endsWith("dc") || id.endsWith("db")) {
           val frame = new Array[Byte](len)
           bb.get(frame)
-          val img =
-            try javax.imageio.ImageIO.read(
-              new java.io.ByteArrayInputStream(frame))
-            catch { case _: java.io.IOException => null }
+          val img = ImageCodec.read(frame)
           if (img == null) return false
           if (w < 0) { w = img.getWidth; h = img.getHeight }
           else if (w != img.getWidth || h != img.getHeight)

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -93,10 +92,4 @@ object WsTokens {
     }
     new GenericArrayData(out)
   }
-
-  /** Register `ws_tokens(string) -> array<string>` (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ws_tokens",
-      (exprs: Seq[Expression]) => WsTokens(exprs.head), "scala_udf")
 }

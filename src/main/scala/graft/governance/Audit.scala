@@ -2,7 +2,10 @@ package graft.governance
 
 
 import scala.jdk.CollectionConverters._
+import scala.util.Try
 
+import org.apache.logging.log4j.LogManager
+import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -23,7 +26,7 @@ final case class AuditEvent(
     error: Option[String])
 
 /** Process-wide audit sink. In-memory ring for tests/inspection plus
-  * stderr lines; a production deployment would point this at a durable
+  * log4j lines; a production deployment would point this at a durable
   * sink (the reference ships them to CloudTrail/S3).
   */
 object AuditLog {
@@ -61,17 +64,24 @@ object AuditLog {
   */
 class AuditListener extends QueryExecutionListener {
 
+  private val log = LogManager.getLogger(classOf[AuditListener])
+
   private def eventFor(funcName: String, qe: QueryExecution,
       durationNs: Long, error: Option[String]): AuditEvent = {
-    val tables = qe.analyzed.collect {
+    // a query denied at analysis (a column governance hid, say) has no
+    // analyzed plan — touching it rethrows — but its parsed plan still
+    // names the tables it tried to read
+    val plan = Try(qe.analyzed).getOrElse(qe.logical)
+    val tables = plan.collect {
       case r: LogicalRelation =>
         r.catalogTable.map(_.identifier.unquotedString).getOrElse("<files>")
+      case r: UnresolvedRelation => r.multipartIdentifier.mkString(".")
     }.distinct
     // The governed tag records "<principal>:<filterName>" at ANALYSIS
     // time — the moment governance was decided. The session conf may
     // have been restored to another principal by the time this listener
     // fires (it is async), so the tag is the trustworthy source.
-    val applied = qe.analyzed.collect {
+    val applied = plan.collect {
       case p if p.getTagValue(GovernanceRule.GovernedTag).isDefined =>
         p.getTagValue(GovernanceRule.GovernedTag).get
     }.headOption
@@ -82,7 +92,7 @@ class AuditListener extends QueryExecutionListener {
     // planning, touching it RETHROWS, the listener bus swallows the
     // throw, and the failed (most audit-worthy) access would leave no
     // record — guard it
-    val rowsOut = scala.util.Try(
+    val rowsOut = Try(
       qe.executedPlan.metrics.get("numOutputRows").map(_.value))
       .toOption.flatten
     AuditEvent(funcName, principal, tables, applied.isDefined, rowsOut,
@@ -97,18 +107,13 @@ class AuditListener extends QueryExecutionListener {
     // reference's per-query CloudWatch publication (main.tf:502)
     QueryMetricsCollector.collect(funcName, e.principal, e.tables,
       qe, durationNs).foreach(MetricsLog.record)
-    logInfo(s"audit: $e")
+    log.info(s"audit: $e")
   }
 
   override def onFailure(funcName: String, qe: QueryExecution,
       exception: Exception): Unit = {
     val e = eventFor(funcName, qe, 0L, Some(exception.getMessage))
     AuditLog.record(e)
-    logWarning(s"audit(failed): $e")
+    log.warn(s"audit(failed): $e")
   }
-
-  // minimal logging without depending on Spark's internal Logging trait;
-  // successful governed accesses are part of the audit trail too
-  private def logInfo(s: String): Unit = System.err.println(s"[audit] $s")
-  private def logWarning(s: String): Unit = System.err.println(s"[audit] $s")
 }

@@ -27,16 +27,9 @@ import org.apache.spark.sql.execution.streaming.runtime.StreamingRelation
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectResolutionRule { session =>
-      // the rule builder runs once per session as its analyzer is built —
-      // the hook where graft's SQL functions (simhash64, cosine_quant,
-      // shingles, ...) are registered, so ANY session carrying this
-      // extension can call them without a manual
-      // GraftFunctions.register step (query builders still register for
-      // extension-less sessions)
-      graft.functions.GraftFunctions.register(session)
-      GovernanceRule(session)
-    }
+    ext.injectResolutionRule(GovernanceRule(_))
+    // graft's SQL functions (simhash64, shingles, cosine_quant, ...)
+    graft.functions.GraftFunctions.functions.foreach(ext.injectFunction)
     // SQL-name surface for CDC tables: registered names expand to the
     // live snapshot plan at analysis time (graft.streaming.CdcSql).
     // Catalog resolution runs in the same fixpoint and wins, so real

@@ -37,7 +37,6 @@ object Multimodal {
     * shape a crawler's media sidecar table has.
     */
   def mediaFromDocs(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     // deliberately NOT scan-spread (r21, measured twice — including
     // after the ImageIO memory-cache fix): the JDK codec stack behind
     // the payload/fingerprint expressions serializes on process-global
@@ -108,8 +107,8 @@ object Multimodal {
     * swaps in a codec's scaler; the schema/partitioning contract — binary
     * in, smaller binary out, map-side — is what downstream operators
     * depend on). Output length is ceil(len / factor). Single-pass
-    * codegen'd kernel ([[graft.functions.BinaryStride]]); callers must
-    * have run `GraftFunctions.register` on the session.
+    * codegen'd kernel ([[graft.functions.BinaryStride]]), which comes
+    * with `GraftExtensions`.
     */
   def resizeStub(payload: Column, factor: Int): Column =
     org.apache.spark.sql.functions.call_function("binary_stride",
@@ -147,7 +146,6 @@ object Multimodal {
     */
   def imageNearDupPairs(media: DataFrame, idCol: String,
       payloadCol: String, maxHamming: Int = 3): DataFrame = {
-    graft.functions.GraftFunctions.register(media.sparkSession)
     graft.dedup.Dedup.hammingCandidates(
       media.select(col(idCol).as("doc_id"),
         imageDHash(col(payloadCol)).as("fp")))
@@ -171,7 +169,6 @@ object Multimodal {
     */
   def audioNearDupPairs(media: DataFrame, idCol: String,
       payloadCol: String, maxHamming: Int = 7): DataFrame = {
-    graft.functions.GraftFunctions.register(media.sparkSession)
     graft.dedup.Dedup.hammingCandidates(
       media.select(col(idCol).as("doc_id"),
         audioFingerprint(col(payloadCol)).as("fp")),

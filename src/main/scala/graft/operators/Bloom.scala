@@ -104,7 +104,6 @@ object Bloom {
         s"probe frame must not carry the reserved column '$c'"))
     require(!filter.columns.contains(SetCol),
       s"filter frame must not carry the reserved column '$SetCol'")
-    graft.functions.GraftFunctions.register(probes.sparkSession)
     val mask = new Array[Byte](((m + 7) / 8).toInt)
     filter.select(col("bit")).collect().foreach { r =>
       val b = r.getLong(0)

@@ -50,9 +50,8 @@ object Dsir {
   def weights(docs: DataFrame, idCol: String, textCol: String,
       target: DataFrame, raw: DataFrame,
       keep: Seq[String] = Nil): DataFrame = {
-    import graft.functions.{GraftFunctions, TextFunctions => T}
+    import graft.functions.{TextFunctions => T}
     import org.apache.spark.sql.types.LongType
-    GraftFunctions.register(docs.sparkSession)
     // ONE doc-side bigram explode scores BOTH models (r22): the
     // two NgramLm.score calls each re-tokenized and re-exploded the
     // SAME documents, ran separate per-doc aggregates and joined the

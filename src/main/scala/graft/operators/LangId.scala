@@ -87,7 +87,6 @@ object LangId {
   def trainProfiles(labeled: DataFrame, langCol: String, textCol: String,
       m: Int = 100): DataFrame = {
     require(m >= 1, "m must be >= 1")
-    graft.functions.GraftFunctions.register(labeled.sparkSession)
     val w = Window.partitionBy(col("lang"))
       .orderBy(col("cnt").desc, col("gram"))
     labeled
@@ -107,7 +106,6 @@ object LangId {
     */
   def classify(docs: DataFrame, idCol: String, textCol: String,
       profiles: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     // char-gram explosion is compute-dense map work: spread an
     // under-split doc layout first (guide §2.5; no-op at production
     // file counts) so the split + gram pass runs on every core

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
-import graft.functions.{GraftFunctions, TextFunctions => T}
+import graft.functions.{TextFunctions => T}
 
 /** Bigram language-model document scoring — the CCNet move (Wenzek et
   * al. 2020: score every candidate document under a language model
@@ -46,7 +46,6 @@ object NgramLm {
     * Shingles kernel (n=2), one two-phase hash aggregate.
     */
   def bigramCounts(ref: DataFrame, textCol: String): DataFrame = {
-    GraftFunctions.register(ref.sparkSession)
     ref.select(explode(T.shingles(col(textCol), 2)).as("bigram"))
       .groupBy(col("bigram"))
       .agg(count(lit(1)).as("c12"))
@@ -65,7 +64,6 @@ object NgramLm {
     */
   private def joined(docs: DataFrame, idCol: String, textCol: String,
       ref: DataFrame, keep: Seq[String]): DataFrame = {
-    GraftFunctions.register(docs.sparkSession)
     val c12 = bigramCounts(ref, textCol)
     val c1 = unigramCounts(ref, textCol)
     val v = c1.agg(count(lit(1)).cast(LongType).as("v"))

@@ -44,7 +44,6 @@ object SetSimilarity {
   def jaccardSelfJoin(df: DataFrame, idCol: String, tokens: Column,
       t: Double): DataFrame = {
     require(t > 0.0 && t <= 1.0, s"threshold out of (0, 1]: $t")
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val base = Tables.spread(
       df.select(col(idCol).cast(LongType).as("id"),
         array_distinct(tokens).as("toks"))

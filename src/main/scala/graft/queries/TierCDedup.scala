@@ -232,7 +232,6 @@ private[queries] object TierCDedup {
     // embarrassingly parallel — the standard pretraining decontamination
     // shape (n-gram overlap against eval data).
     "q_decontaminate" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       val docs = Tables.documents(s, d)
       val evalShingles = docs.filter(col("doc_id") < 10)
         .select(explode(array_distinct(T.shingles(col("text"), 3)))
@@ -260,7 +259,6 @@ private[queries] object TierCDedup {
     // with the exact broadcast twin q_decontaminate oracle-checked and
     // ToleranceSpec pinning the no-false-negative + FP-rate bounds.
     "q_bloom_decontaminate" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       val docs = Tables.documents(s, d)
       val eval = docs.filter(col("doc_id") < 10)
         .select(explode(array_distinct(T.shingles(col("text"), 3)))

@@ -559,7 +559,6 @@ private[queries] object TierCPipeline {
     // Hamming <= 3, unrelated-pair separation, and NULL pass-through
     // for non-image payloads.
     "q_image_neardup" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       val images = M.mediaFromDocs(Tables.documents(s, d))
         .filter(col("media_type") === "image" && col("media_id") < 3000)
         .select(col("media_id"), col("payload"))
@@ -588,7 +587,6 @@ private[queries] object TierCPipeline {
     // MultimodalSpec pins determinism, the edit bound, and
     // guaranteed planted-pair recall.
     "q_audio_neardup" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       // deliberately NOT scan-spread even after the r22 registry-free
       // WAV parser made the encode+fingerprint map work thread-safe:
       // measured (r22, 4 reps, spread vs not, after the cappedPairs

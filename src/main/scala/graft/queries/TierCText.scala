@@ -85,7 +85,6 @@ private[queries] object TierCText {
     // two-phase aggregates (grams + longs on the wire, never text) +
     // two O(docs) primary-key joins; everything else map-side.
     "q_gopher_filter" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       // r22: every statistic here is a pure function of ONE document's
       // tokens, so the whole filter is a MAP-ONLY plan — one codegen'd
       // per-row kernel ([[graft.functions.GramRepStats]]: dense-id
@@ -268,7 +267,6 @@ private[queries] object TierCText {
     // on exact integers (one IEEE division), so it is bit-stable and
     // oracle-checked despite being a heuristic.
     "q_repetition_filter" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       Tables.documents(s, d)
         .filter(col("doc_id") < 500)
         .select(col("doc_id"),
@@ -396,7 +394,6 @@ private[queries] object TierCText {
     // DuckDB twin (utf8proc nfc_normalize/strip_accents) hash-checks
     // the full compose → de-accent → casefold pipeline byte-for-byte.
     "q_text_normalize" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       Tables.documents(s, d).filter(col("doc_id") < 300)
         .select(col("doc_id"),
           concat(substring(col("text"), 1, 20), lit(T.accentProbe))

@@ -96,7 +96,7 @@ object SalesFixture {
     * DDL runs as DataAdmin: the admin owns the catalog objects; governance
     * applies when other principals query them.
     */
-  def register(spark: SparkSession, location: String): Unit =
+  def registerTables(spark: SparkSession, location: String): Unit =
     graft.governance.Governance.withPrincipal(
         spark, graft.governance.DataAdmin) {
       // the storage path itself is governed: a direct
@@ -133,7 +133,7 @@ object SalesFixture {
       "target/graft-data/sales_parquet").getAbsolutePath
     // the catalog can outlive the JVM (persistent metastore) while the
     // JVM-static governed-locations map cannot: if registration were only
-    // inside register(), a restarted session with surviving catalog
+    // inside registerTables(), a restarted session with surviving catalog
     // objects would silently lose direct-path governance. Idempotent, so
     // always re-register the location.
     graft.governance.GovernanceCatalog.registerLocation(
@@ -141,7 +141,7 @@ object SalesFixture {
     if (!spark.catalog.databaseExists(dbName) ||
         !spark.catalog.tableExists(s"$dbName.$tableName") ||
         !spark.catalog.tableExists(s"$dbName.$viewName")) {
-      register(spark, loc)
+      registerTables(spark, loc)
     }
   }
 

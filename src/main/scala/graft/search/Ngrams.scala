@@ -37,9 +37,6 @@ object Ngrams {
     */
   def docShingles(docs: DataFrame, idCol: String, textCol: String,
       n: Int = 3): DataFrame = {
-    // defensive registration for extension-less sessions (the Dedup
-    // convention; shingles resolves through the function registry)
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs.select(col(idCol).as("doc_id"),
       explode(array_distinct(TextFunctions.shingles(col(textCol), n)))
         .as("shingle"))
@@ -113,7 +110,6 @@ object Ngrams {
       topK: Int = 25): DataFrame = {
     require(spanTokens >= 2 && minDocs >= 2 && topK >= 1,
       s"invalid repeatedSpans params ($spanTokens, $minDocs, $topK)")
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val toks = TextFunctions.tokens(col(textCol))
     // per-doc distinct span windows via the codegen'd [[Shingles]]
     // kernel (the interpreted transform/slice/concat_ws form costs
@@ -161,7 +157,6 @@ object Ngrams {
     */
   def groupOverlap(docs: DataFrame, groupCol: String, textCol: String,
       n: Int = 3, stagingDir: Option[String] = None): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     // distinct (group, shingle): the per-group shingle SET. The frame
     // feeds THREE plan subtrees (both sides of the intersection join +
     // the set sizes) and Spark does not share subtrees, so without

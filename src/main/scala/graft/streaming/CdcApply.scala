@@ -305,8 +305,17 @@ object CdcApply {
       : Option[String] = {
     val fs = fsFor(spark, root)
     val ptr = new Path(root, "CURRENT")
-    if (!fs.exists(ptr)) None
-    else Some(readSmallFile(fs, ptr).trim)
+    // CURRENT existed, so if it is gone now a pointer flip is under way:
+    // on the local filesystem a rename with OVERWRITE deletes the old
+    // pointer before it renames the new one in. Read again.
+    def read(retries: Int): String =
+      try readSmallFile(fs, ptr).trim
+      catch {
+        case _: java.io.FileNotFoundException if retries > 0 =>
+          Thread.sleep(1)
+          read(retries - 1)
+      }
+    if (!fs.exists(ptr)) None else Some(read(1000))
   }
 
   /** The batch id `CURRENT` covers, or None before the first apply.

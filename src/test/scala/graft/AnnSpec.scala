@@ -243,7 +243,6 @@ class AnnSpec extends AnyFunSuite with SparkTestBase {
     // end-to-end through the codegen'd expression
     import spark.implicits._
     import graft.functions.GraftFunctions
-    GraftFunctions.register(spark)
     val df = Seq((Array.fill(64)(500.0f), Array.fill(64)(500.0f)))
       .toDF("a", "b")
     val thrown = intercept[Throwable] {
@@ -257,7 +256,6 @@ class AnnSpec extends AnyFunSuite with SparkTestBase {
   test("fused expressions match the Column-level reference formulations") {
     import spark.implicits._
     import graft.functions.{GraftFunctions, VectorFunctions}
-    GraftFunctions.register(spark)
     val vecs = Seq(
       Array(0.13f, -0.8f, 2.5f, 0.0f),
       Array(-1.0f, 1.0f, -1.0f, 1.0f),

@@ -275,4 +275,29 @@ class CdcFenceSpec extends AnyFunSuite with SparkTestBase
     assert(CdcApply.currentManifestName(spark, root).contains("v99.0"),
       s"stale-crc read did not recover (was $before)")
   }
+
+  test("a pointer read racing pointer flips never fails on a " +
+    "CURRENT that vanished mid-flip") {
+    val root = newRoot()
+    assert(CdcApply.applyBatch(b0, 0L, root, Seq("k"), "version",
+      Some("deleted")))
+    val name = CdcApply.currentManifestName(spark, root).get
+    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
+      new java.io.File(root).toURI, spark.sparkContext.hadoopConfiguration)
+    // re-point CURRENT at the same manifest, the way a commit flips it
+    val flips = new java.util.concurrent.atomic.AtomicInteger
+    val flipper = new Thread(() => (0 until 300).foreach { i =>
+      val tmp = new java.io.File(root, s".CURRENT.$i.tmp")
+      java.nio.file.Files.writeString(tmp.toPath, name)
+      fc.rename(new org.apache.hadoop.fs.Path(tmp.getPath),
+        new org.apache.hadoop.fs.Path(root, "CURRENT"),
+        org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+      flips.incrementAndGet()
+    })
+    flipper.start()
+    try while (flipper.isAlive)
+      assert(CdcApply.currentManifestName(spark, root).forall(_ == name))
+    finally flipper.join()
+    assert(flips.get == 300)
+  }
 }

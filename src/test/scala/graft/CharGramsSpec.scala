@@ -12,7 +12,6 @@ class CharGramsSpec extends AnyFunSuite with SparkTestBase {
 
   private def bothWays(s: String): (Seq[String], Seq[String]) = {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val row = Seq(s).toDF("text")
       .select(
         graft.functions.GraftFunctions.charGrams($"text").as("n"),

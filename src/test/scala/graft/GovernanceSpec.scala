@@ -427,22 +427,38 @@ class GovernanceSpec extends AnyFunSuite with SparkTestBase {
       .isEmpty)
   }
 
+  /** Waits up to 10 s for the async listener to record an event `p`
+    * accepts.
+    */
+  private def awaitAudit(p: AuditEvent => Boolean): Unit = {
+    val deadline = System.currentTimeMillis() + 10000
+    while (!AuditLog.events.exists(p) &&
+        System.currentTimeMillis() < deadline) Thread.sleep(100)
+    assert(AuditLog.events.exists(p),
+      s"no matching audit event in ${AuditLog.events}")
+  }
+
   test("audit listener records governed queries with principal") {
     SalesFixture.ensureRegistered(spark)
     AuditLog.clear()
     Governance.withPrincipal(spark, Analyst)(
       spark.sql("SELECT * FROM sales_db.sales")).collect()
-    // listener bus is async — poll
-    val deadline = System.currentTimeMillis() + 10000
-    var found = false
-    while (!found && System.currentTimeMillis() < deadline) {
-      found = AuditLog.events.exists(e =>
-        e.governed && e.tables.exists(_.contains("sales")) &&
-          e.principal == Analyst.name)
-      if (!found) Thread.sleep(100)
-    }
-    assert(found,
-      s"no governed Analyst audit event in ${AuditLog.events}")
+    awaitAudit(e => e.governed && e.tables.exists(_.contains("sales")) &&
+      e.principal == Analyst.name)
+  }
+
+  test("a read denied at analysis still leaves an audit record") {
+    SalesFixture.ensureRegistered(spark)
+    // a session of its own whose principal is never restored, so the
+    // async listener reads a stable principal from its conf
+    val s = spark.newSession()
+    s.conf.set(GovernanceRule.PrincipalConf, Analyst.name)
+    s.listenerManager.register(new AuditListener)
+    val denied = intercept[org.apache.spark.sql.AnalysisException](
+      s.sql("SELECT ssn FROM sales_db.sales"))
+    assert(denied.getMessage.contains("UNRESOLVED_COLUMN"))
+    awaitAudit(e => e.error.exists(_.contains("UNRESOLVED_COLUMN")) &&
+      e.principal == Analyst.name && e.tables.contains("sales_db.sales"))
   }
 
   // ---- write-path governance (reference main.tf:460-487: Analyst is

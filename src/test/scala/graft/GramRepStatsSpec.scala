@@ -24,7 +24,6 @@ class GramRepStatsSpec extends AnyFunSuite with SparkTestBase {
 
   private def kernel(toks: Seq[String]): (Long, Long, Long) = {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val r = Seq(Tuple1(toks)).toDF("toks")
       .select(graft.functions.GraftFunctions.gramRepStats(col("toks"))
         .as("st"))

@@ -66,7 +66,6 @@ class MultimodalSpec extends AnyFunSuite with SparkTestBase {
     "dimensions follow the seed formulas, mean luma tracks the raw " +
     "pixels within JPEG loss, unparseable bytes decode NULL") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val rt = (0L until 25L).toDF("seed")
       .select(col("seed"),
         M.decodeVideo(graft.functions.GraftFunctions
@@ -105,7 +104,6 @@ class MultimodalSpec extends AnyFunSuite with SparkTestBase {
     "follow the seed formulas, rms tracks the seeded amplitude, " +
     "unparseable bytes decode NULL") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val seeds = (0L until 40L).toDF("seed")
     val rt = seeds.select(col("seed"),
         M.decodeAudio(graft.functions.GraftFunctions
@@ -138,7 +136,6 @@ class MultimodalSpec extends AnyFunSuite with SparkTestBase {
     "seed formula, luma is a valid pixel mean, undecodable bytes " +
     "decode NULL") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val seeds = (0L until 40L).toDF("seed")
     val rt = seeds.select(col("seed"),
         M.decodeImage(graft.functions.GraftFunctions
@@ -220,7 +217,6 @@ class MultimodalSpec extends AnyFunSuite with SparkTestBase {
 
   test("resizeStub downsamples payload bytes by the factor") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val out = Seq("abcdefghij").toDF("text")
       .select(M.resizeStub($"text".cast("binary"), 3).as("r"),
         M.resizeStub($"text".cast("binary"), 1).as("same"))
@@ -243,7 +239,6 @@ class MultimodalSpec extends AnyFunSuite with SparkTestBase {
   test("dhash64: deterministic, matches the sequential compute, NULL " +
       "for non-image bytes, and two calls codegen in one projection") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val seeds = (0L until 40L).toDF("seed")
     val out = seeds.select($"seed",
       graft.functions.GraftFunctions.dhash64(
@@ -273,7 +268,6 @@ class MultimodalSpec extends AnyFunSuite with SparkTestBase {
   test("png_perturb changes every-byte-comparable payload but not the " +
       "perceptual hash; near-dup pairs recover exactly the planted set") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val n = 60L
     val images = (0L until n).toDF("seed")
       .select($"seed".as("media_id"),
@@ -300,7 +294,6 @@ class MultimodalSpec extends AnyFunSuite with SparkTestBase {
   test("audio_fp64: deterministic, matches the sequential compute, " +
       "NULL for image bytes and sub-65-sample clips") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val out = (0L until 40L).toDF("seed")
       .select($"seed", graft.functions.GraftFunctions.audioFp64(
         graft.functions.GraftFunctions.wavEncode($"seed")).as("fp"))
@@ -321,7 +314,6 @@ class MultimodalSpec extends AnyFunSuite with SparkTestBase {
       "most the PROVEN 6-bit bound, and planted pairs are always " +
       "recovered (pigeonhole recall at 8-bit chunks)") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val n = 60L
     val audios = (0L until n).toDF("seed")
       .select($"seed".as("media_id"),

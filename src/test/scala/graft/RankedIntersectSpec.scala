@@ -13,7 +13,6 @@ class RankedIntersectSpec extends AnyFunSuite with SparkTestBase {
 
   private def check(a: Seq[(Long, String)], b: Seq[(Long, String)]): Unit = {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val df = Seq((a, b)).toDF("a", "b")
       .select(
         // inputs arrive pre-sorted in the operator; sort here so the
@@ -47,7 +46,6 @@ class RankedIntersectSpec extends AnyFunSuite with SparkTestBase {
 
   private def checkLongs(a: Seq[Long], b: Seq[Long]): Unit = {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val df = Seq((a.distinct.sorted, b.distinct.sorted)).toDF("ra", "rb")
       .select(
         graft.functions.GraftFunctions

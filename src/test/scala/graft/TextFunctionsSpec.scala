@@ -50,7 +50,6 @@ class TextFunctionsSpec extends AnyFunSuite with SparkTestBase {
 
   test("shingles: sliding windows, short text collapses to one shingle") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val sh = Seq("a b c d").toDF("text")
       .select(T.shingles($"text", 3).as("s")).collect().head
       .getSeq[String](0)
@@ -79,7 +78,6 @@ class TextFunctionsSpec extends AnyFunSuite with SparkTestBase {
   test("nfc_normalize composes, strip_accents de-accents but keeps " +
       "non-decomposables, normalizeText chains with casefold") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     // decomposed e + combining acute \u2192 one composed codepoint
     assert(one[String](T.nfc($"text"), "re\u0301sume\u0301") ===
       "r\u00e9sum\u00e9")
@@ -128,7 +126,6 @@ class TextFunctionsSpec extends AnyFunSuite with SparkTestBase {
   test("shingles on a non-array child fails at analysis, not runtime") {
     import spark.implicits._
     import org.apache.spark.sql.functions.call_function
-    graft.functions.GraftFunctions.register(spark)
     val e = intercept[org.apache.spark.sql.AnalysisException] {
       Seq(1L).toDF("x")
         .select(call_function("shingles", $"x",
@@ -137,5 +134,31 @@ class TextFunctionsSpec extends AnyFunSuite with SparkTestBase {
     }
     assert(e.getMessage.contains("shingles") ||
       e.getMessage.toLowerCase.contains("type"))
+  }
+
+  test("GraftExtensions injects every graft SQL function into new " +
+      "sessions; SQL text matches the column helpers") {
+    import spark.implicits._
+    val s = spark.newSession()
+    graft.functions.GraftFunctions.functions.foreach { case (id, _, _) =>
+      assert(s.sessionState.functionRegistry.functionExists(id), id)
+      assert(s.sessionState.functionRegistry.lookupFunction(id)
+        .exists(_.getClassName.startsWith("graft.functions.")), id)
+    }
+    val texts = "VALUES ('a b  c d'), ('x') AS v(text)"
+    val viaSql = s.sql("SELECT text, ws_tokens(text), " +
+      s"shingles(ws_tokens(text), 2), simhash64(ws_tokens(text)) FROM $texts")
+      .orderBy("text").collect().toSeq
+    val viaCols = Seq("a b  c d", "x").toDF("text").select($"text",
+      T.tokens($"text"), T.shingles($"text", 2),
+      graft.functions.GraftFunctions.simhash64(T.tokens($"text")))
+      .orderBy("text").collect().toSeq
+    assert(viaSql == viaCols)
+    assert(viaSql.head.getSeq[String](2) == Seq("a b", "b c", "c d"))
+    // the shingle size must be an int literal
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      s.sql(s"SELECT shingles(array('a', 'b'), length(text)) FROM $texts")
+    }
+    assert(e.getMessage.contains("shingles"), e.getMessage)
   }
 }

@@ -29,7 +29,6 @@ class ToleranceSpec extends AnyFunSuite with SparkTestBase {
     * docs. Shared by the MinHash and SimHash twins.
     */
   private lazy val groundTruthPairs: Array[(Long, Long, Double)] = {
-    GraftFunctions.register(spark)
     val sh = Tables.documents(spark, sfDir)
       .select(col("doc_id").as("id"),
         array_distinct(TextFunctions.shingles(col("text"), 3)).as("sh"))
@@ -103,7 +102,6 @@ class ToleranceSpec extends AnyFunSuite with SparkTestBase {
     "within the theoretical bound; merged filters equal one build") {
     import graft.operators.Bloom
     val (m, k) = (1L << 16, 5)
-    GraftFunctions.register(spark)
     val docs = Tables.documents(spark, sfDir)
     val evalSh = docs.filter(col("doc_id") < 10)
       .select(explode(array_distinct(
@@ -243,7 +241,6 @@ class ToleranceSpec extends AnyFunSuite with SparkTestBase {
 
   test("simhash honors the pigeonhole recall contract; hamming is exact") {
     val docs = Tables.documents(spark, sfDir)
-    GraftFunctions.register(spark)
     // independently computed fingerprint Hamming per ground-truth pair
     val fps = docs.select(col("doc_id"),
       GraftFunctions.simhash64(TextFunctions.tokens(col("text"))).as("fp"))
@@ -273,7 +270,6 @@ class ToleranceSpec extends AnyFunSuite with SparkTestBase {
     // on the real corpus: every REPORTED pair's sim must equal the
     // independently computed exact cosine (the verify stage is exact)
     val emb = Tables.embeddings(spark, sfDir)
-    GraftFunctions.register(spark)
     val vecs = emb.select(col("vec_id").as("vid"), col("embedding").as("v"))
     val reported = Ann.lshNearDupPairs(emb, "vec_id", "embedding", bits = 12)
       .limit(200)

@@ -17,7 +17,6 @@ class WsTokensSpec extends AnyFunSuite with SparkTestBase {
 
   private def bothWays(s: String): (Seq[String], Seq[String]) = {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val row = Seq(s).toDF("text")
       .select(graft.functions.TextFunctions.tokens($"text").as("n"),
         oldTokens($"text").as("o"))
@@ -54,7 +53,6 @@ class WsTokensSpec extends AnyFunSuite with SparkTestBase {
 
   test("null text yields null, not a crash") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val row = Seq[Option[String]](None).toDF("text")
       .select(graft.functions.TextFunctions.tokens($"text").as("n"))
       .collect().head
