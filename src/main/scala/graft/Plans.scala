@@ -495,10 +495,10 @@ object Plans {
     "q_lang_id_learned" -> ("Learned language-ID: training is one " +
       "char-gram explode + two-phase (lang, gram) hash aggregate " +
       "(2-char grams + longs on the wire, never text) and a top-m " +
-      "window per language; the <= m-rows-per-language profile " +
-      "BROADCASTS into the prediction join, scores reduce map-side " +
-      "per (doc, lang), and the argmax is one min-struct aggregate — " +
-      "document text never shuffles."),
+      "window per language; the <= m-rows-per-language profile is " +
+      "collected to the driver and rides the plan as a literal, and " +
+      "prediction is one lang_argmax row kernel per document after " +
+      "the scan spread — no join, no shuffle of grams."),
     "q_gopher_filter" -> ("Gopher repetition filter: MAP-ONLY (r22) — " +
       "every statistic is a pure function of one document's tokens, so " +
       "one codegen'd per-row kernel (gram_rep_stats: distinct tokens, " +

@@ -48,6 +48,12 @@ object GraftFunctions {
   /** Char 1+2-grams of the lowercased text (see [[CharGrams]]). */
   def charGrams(text: Column): Column = call_function("char_grams", text)
 
+  /** Learned language-ID argmax of a gram stream against a constant
+    * profile (see [[LangArgmax]]).
+    */
+  def langArgmax(grams: Column, profile: Column): Column =
+    call_function("lang_argmax", grams, profile)
+
   /** All-bits-set probe of a packed Bloom bitmask (see
     * [[BloomBitsSet]]).
     */
@@ -142,6 +148,7 @@ object GraftFunctions {
     fn("ws_tokens")(es => WsTokens(es.head)),
     fn("ranked_intersect_count")(es => RankedIntersectCount(es(0), es(1))),
     fn("char_grams")(es => CharGrams(es.head)),
+    fn("lang_argmax")(es => LangArgmax(es(0), es(1))),
     fn("bloom_bits_set")(es => BloomBitsSet(es(0), es(1))),
     fn("gram_rep_stats")(es => GramRepStats(es.head)),
     fn("png_encode")(es => PngEncode(es.head)),

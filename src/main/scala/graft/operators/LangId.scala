@@ -31,11 +31,12 @@ import org.apache.spark.sql.types.LongType
   * Scale shape: training is one explode + two-phase hash aggregate on
   * (lang, gram) — the shuffle carries 2-char grams with long counts —
   * plus a per-language top-m window over ≤ |langs|·|distinct grams|
-  * rows. The learned profile is ≤ m rows per language: BROADCAST by
-  * construction. Prediction is one explode + aggregate on the doc's
-  * own grams and one broadcast join against the profile — no shuffle
-  * ever carries document text, and the 100 TB cost is the one
-  * tf-aggregate pass.
+  * rows. The learned profile is ≤ m rows per language, so prediction
+  * collects it to the driver and scores each document in ONE row
+  * kernel ([[graft.functions.LangArgmax]]) with the profile as a plan
+  * literal: the spread is the only exchange, and no shuffle ever
+  * carries document text or per-gram rows. The 100 TB cost is one map
+  * pass over the documents.
   */
 object LangId {
 
@@ -100,55 +101,28 @@ object LangId {
         (lit(m) - col("rn") + 1).cast(LongType).as("w"))
   }
 
-  /** Predicted language per document: (idCol, pred_lang). Every
-    * profile language is a candidate (score 0 on zero overlap);
-    * argmax by (score desc, lang asc) via a single min-struct.
+  /** Predicted language per document: (idCol, pred_lang), one row per
+    * input row. Every profile language is a candidate (score 0 on zero
+    * overlap, and for null or empty text); argmax by (score desc, lang
+    * asc). An empty profile yields no rows. Ids must be unique: the
+    * kernel scores each row on its own text, where a relational
+    * group-by would merge the grams of rows sharing an id.
     */
   def classify(docs: DataFrame, idCol: String, textCol: String,
       profiles: DataFrame): DataFrame = {
-    // char-gram explosion is compute-dense map work: spread an
+    val profile = profiles
+      .select(col("lang"), col("gram"), col("w").cast(LongType))
+      .collect().toSeq
+      .map(r => (r.getString(0), r.getString(1),
+        if (r.isNullAt(2)) 0L else r.getLong(2)))
+    // char-gram scoring is compute-dense map work: spread an
     // under-split doc layout first (guide §2.5; no-op at production
-    // file counts) so the split + gram pass runs on every core
-    val tf = graft.sources.Tables.spread(
+    // file counts) so the gram pass runs on every core
+    val pred = graft.sources.Tables.spread(
       docs.select(col(idCol), col(textCol)))
-      .select(col(idCol), explode(gramsOf(col(textCol))).as("gram"))
-      .groupBy(col(idCol), col("gram"))
-      .agg(count(lit(1)).as("tf"))
-    val scores = tf.join(broadcast(profiles), "gram")
-      .groupBy(col(idCol), col("lang"))
-      .agg(sum(col("tf") * col("w")).as("score"))
-    // argmax by (score desc, lang asc) over ONE packed long per
-    // candidate row (r22): min over a STRUCT falls back to
-    // SortAggregate (struct buffers are not hash-aggregable), sorting
-    // every (doc, lang) row on both sides of the exchange. The
-    // language dimension is bounded (a learned profile has a handful
-    // of languages), so rank each lang once (tiny single-partition
-    // window — |langs| rows) and pack score·2¹⁶ + (2¹⁶-1 - rank):
-    // max(packed) = highest score, ties to the LOWEST rank = lexically
-    // smallest lang, exactly the old struct order. Scores are
-    // non-negative integer rank-weights sums; out-of-range packing
-    // (score >= 2⁴⁶ or > 2¹⁶ languages) REFUSES in-plan (raise_error)
-    // rather than mis-ranking.
-    val langs = profiles.select(col("lang")).distinct()
-      .withColumn("lidx",
-        row_number().over(Window.orderBy(col("lang"))).cast(LongType) - 1)
-    val enc = {
-      val s = coalesce(col("score"), lit(0L))
-      when(s >= 0 && s < (1L << 46) && col("lidx") < (1L << 16),
-        shiftleft(s, 16) + (lit((1L << 16) - 1) - col("lidx")))
-        .otherwise(raise_error(concat(
-          lit("lang-id argmax packing out of range: score="),
-          s.cast("string"), lit(" lidx="), col("lidx").cast("string"))))
-    }
-    docs.select(col(idCol))
-      .crossJoin(broadcast(langs))
-      .join(scores, Seq(idCol, "lang"), "left")
-      .groupBy(col(idCol))
-      .agg(max(enc).as("best"))
       .select(col(idCol),
-        ((lit(1L << 16) - 1) - col("best").bitwiseAND(lit(0xFFFFL)))
-          .as("lidx"))
-      .join(broadcast(langs), "lidx")
-      .select(col(idCol), col("lang").as("pred_lang"))
+        graft.functions.GraftFunctions.langArgmax(
+          gramsOf(col(textCol)), typedLit(profile)).as("pred_lang"))
+    if (profile.isEmpty) pred.filter(lit(false)) else pred
   }
 }

@@ -31,8 +31,11 @@ import graft.sources.Tables
   * candidate join never degenerates to all-pairs on stopwords — the
   * failure mode a naive token join has on any natural corpus.
   *
-  * Plan shape: one token-frequency aggregate, one shuffle keyed on
-  * (rare) prefix tokens, verify on the surviving candidates.
+  * Plan shape: the raw input is spread first and tokenized ONCE above
+  * the spread, into a lineage cut of (id, toks, sz); then one
+  * token-frequency aggregate, one vocabulary range exchange for the
+  * rank ids, a second cut of the ranked arrays, one shuffle keyed on
+  * (rare) prefix tokens, and verify on the surviving candidates.
   */
 object SetSimilarity {
 
@@ -44,11 +47,19 @@ object SetSimilarity {
   def jaccardSelfJoin(df: DataFrame, idCol: String, tokens: Column,
       t: Double): DataFrame = {
     require(t > 0.0 && t <= 1.0, s"threshold out of (0, 1]: $t")
-    val base = Tables.spread(
-      df.select(col(idCol).cast(LongType).as("id"),
+    // spread the RAW input, id leading, and tokenize above it: an
+    // expression inside the spread frame would run on the under-split
+    // scan (see Tables.spread). No `sz > 0` filter: explode below drops
+    // empty and null sets, and the optimizer would push such a filter
+    // (and the tokenizer with it) under the spread's exchange. The cut
+    // evaluates the tokenizer ONCE for both consumers of `toks` (the
+    // frequency aggregate and the rank join).
+    val spread = Tables.spread(df.select(
+      col(idCol) +: df.columns.toSeq.filter(_ != idCol).map(col): _*))
+    val base = Cut(spread
+      .select(col(idCol).cast(LongType).as("id"),
         array_distinct(tokens).as("toks"))
-        .withColumn("sz", size(col("toks")).cast(LongType))
-        .filter(col("sz") > 0))
+      .withColumn("sz", size(col("toks")).cast(LongType)))
     val toks = base.select(col("id"), col("sz"),
       explode(col("toks")).as("tok"))
     val freq = toks.groupBy(col("tok"))
@@ -84,14 +95,12 @@ object SetSimilarity {
       .select(col("tok"), monotonically_increasing_id().as("r"))
     // ranked = each record's tokens total-ordered by global rarity —
     // ONE aggregate that feeds BOTH the prefix explosion and the
-    // verification arrays below, so the tokenize/shingle pipeline is
-    // evaluated once, not once per consumer (r21). The aggregate is
-    // MATERIALIZED with a lineage cut (the clusters/pagerank
-    // Cut pattern — recomputed from the parquet inputs on
-    // every invocation, never across runs): four plan subtrees
-    // consume it (prefix self-join ×2, verify sets ×2), and uncut
-    // each would re-run the tokenize → frequency-join → collect
-    // pipeline.
+    // verification arrays below (r21). The aggregate is MATERIALIZED
+    // with a lineage cut (the clusters/pagerank Cut pattern —
+    // recomputed from the parquet inputs on every invocation, never
+    // across runs): four plan subtrees consume it (prefix self-join
+    // ×2, verify sets ×2), and uncut each would re-run the
+    // frequency-join → collect pipeline.
     val ranked = Cut(toks.join(rankTbl, "tok")
       .groupBy(col("id"), col("sz"))
       .agg(sort_array(collect_list(col("r"))).as("ranked")))

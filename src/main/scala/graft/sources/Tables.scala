@@ -235,6 +235,13 @@ object Tables {
     * the layout already parallelizes. `spark.graft.scan.spread=false`
     * disables it outright.
     *
+    * Pass the RAW columns and put the work AFTER the spread: any
+    * expression inside the spread frame (a tokenizer, a filter on a
+    * computed column) runs on the under-split scan, below the exchange,
+    * and gains nothing. A filter on a computed column placed above the
+    * spread lands there too: the optimizer pushes a deterministic filter
+    * through the exchange, its expression with it.
+    *
     * Apply only to NARROW frames (scan + filter/project): the partition
     * probe plans the frame, and a frame carrying exchanges would
     * (a) misreport and (b) under AQE eagerly materialize stages.

@@ -516,7 +516,35 @@ object CdcApply {
     * touched-bucket set is exactly the buckets its keys live in.
     */
   private[streaming] def bucketCol(keys: Seq[String], numBuckets: Int): Column =
-    pmod(xxhash64(keys.map(col): _*), lit(numBuckets.toLong)).cast("int")
+    bucketOf(keys.map(col), numBuckets)
+
+  private def bucketOf(keys: Seq[Column], numBuckets: Int): Column =
+    pmod(xxhash64(keys: _*), lit(numBuckets.toLong)).cast("int")
+
+  /** `v` as a literal of column `k`'s declared type when `schema` knows
+    * it: the bucket hash is type-sensitive, so an untyped literal could
+    * name the wrong bucket.
+    */
+  private[streaming] def keyLit(
+      schema: Option[org.apache.spark.sql.types.StructType], k: String,
+      v: Any): Column =
+    schema.flatMap(_.fields.find(_.name == k))
+      .fold(lit(v))(f => lit(v).cast(f.dataType)).as(k)
+
+  /** The bucket id [[bucketCol]] gives the row holding `keys`, computed
+    * on the driver with no Spark job: over literals the expression is
+    * foldable, and analysis resolves its casts with the session time
+    * zone, as a query would.
+    */
+  private[streaming] def bucketOfLiterals(spark: SparkSession,
+      keys: Seq[Column], numBuckets: Int): Int = {
+    import org.apache.spark.sql.catalyst.expressions.Alias
+    import org.apache.spark.sql.catalyst.plans.logical.Project
+    spark.range(1).select(bucketOf(keys, numBuckets).as("b"))
+      .queryExecution.analyzed match {
+        case Project(Seq(Alias(e, _)), _) => e.eval().asInstanceOf[Int]
+      }
+  }
 
   /** Raw stored rows of the given bucket paths — tombstones and internal
     * columns included (the merge and maintenance view of the data).
@@ -1597,18 +1625,14 @@ object CdcApply {
       val bcols = conf.bucketCols
       values.foreach(v => require(v.size == bcols.size,
         s"expected ${bcols.size} bucket-column value(s) for $bcols"))
+      def lits(typed: Option[org.apache.spark.sql.types.StructType],
+          v: Seq[Any]): Seq[Column] =
+        bcols.zip(v).map { case (k, x) => keyLit(typed, k, x) }
       // the probe tuples as one small frame: a FLAT array of structs
-      // (breadth, never expression depth), each value cast to the
-      // table's declared column type when known — the hash is
-      // type-sensitive, so an untyped literal could name the wrong
-      // bucket
+      // (breadth, never expression depth)
       def valuesFrame(typed: Option[
           org.apache.spark.sql.types.StructType]): DataFrame = {
-        def typedLit(k: String, v: Any): Column =
-          typed.flatMap(_.fields.find(_.name == k))
-            .fold(lit(v))(f => lit(v).cast(f.dataType)).as(k)
-        val structs = values.map(v =>
-          struct(bcols.zip(v).map { case (k, x) => typedLit(k, x) }: _*))
+        val structs = values.map(v => struct(lits(typed, v): _*))
         spark.range(1)
           .select(explode(array(structs: _*)).as("_probe"))
           .select(bcols.map(k => col(s"_probe.$k").as(k)): _*)
@@ -1621,10 +1645,10 @@ object CdcApply {
               .join(broadcast(valuesFrame(None)), bcols, "left_semi"), m)
         case Some(schema) =>
           val probe = valuesFrame(Some(schema))
-          val ids = probe
-            .select(bucketCol(bcols, conf.numBuckets).as("b"))
-            .distinct().collect().map(_.getInt(0))
-            .toSeq.sorted.filter(m.buckets.contains)
+          val ids = values
+            .map(v => bucketOfLiterals(spark, lits(Some(schema), v),
+              conf.numBuckets))
+            .distinct.sorted.filter(m.buckets.contains)
           if (ids.isEmpty)
             // none of the probed buckets ever held a surviving row:
             // the visible shape with zero rows from manifest schema
@@ -2003,15 +2027,12 @@ object CdcApply {
             stripInternal(readRaw(spark, m.dataPaths(root), None), conf)
               .filter(pred), m)
         case Some(schema) =>
-          def typedLit(k: String, v: Any): Column =
-            schema.fields.find(_.name == k)
-              .fold(lit(v))(f => lit(v).cast(f.dataType)).as(k)
-          val b = spark.range(1)
-            .select(keyed.map { case (k, v) => typedLit(k, v) }: _*)
-            .select(bucketCol(conf.bucketCols, conf.numBuckets).as("b"))
-            .head().getInt(0)
-          val pred = keyed.map { case (k, v) =>
-            col(k) === typedLit(k, v) }.reduce(_ && _)
+          val lits = keyed.toMap.map { case (k, v) =>
+            k -> keyLit(Some(schema), k, v) }
+          val b = bucketOfLiterals(spark, conf.bucketCols.map(lits),
+            conf.numBuckets)
+          val pred = keyed.map { case (k, _) => col(k) === lits(k) }
+            .reduce(_ && _)
           m.buckets.get(b) match {
             case Some(_) =>
               // readBucketsResolved keeps the single-bucket-dir scan

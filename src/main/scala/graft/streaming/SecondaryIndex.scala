@@ -243,17 +243,11 @@ object SecondaryIndex {
       // (everything tombstoned, or a carried-forward first commit
       // with no schema yet) short-circuits to the empty shape
       val hits: Option[DataFrame] = im.schema.flatMap { schema =>
-        def typedLit(k: String, v: Any): Column =
-          schema.fields.find(_.name == k)
-            .fold(lit(v))(f => lit(v).cast(f.dataType)).as(k)
-        val keyed = specCols.zip(value)
-        val b = spark.range(1)
-          .select(keyed.map { case (k, v) => typedLit(k, v) }: _*)
-          .select(CdcApply.bucketCol(conf.bucketCols, conf.numBuckets)
-            .as("b"))
-          .head().getInt(0)
-        val pred = keyed.map { case (k, v) =>
-          col(k) === typedLit(k, v) }.reduce(_ && _)
+        val lits = specCols.zip(value).toMap.map { case (k, v) =>
+          k -> CdcApply.keyLit(Some(schema), k, v) }
+        val b = CdcApply.bucketOfLiterals(spark,
+          conf.bucketCols.map(lits), conf.numBuckets)
+        val pred = specCols.map(k => col(k) === lits(k)).reduce(_ && _)
         CdcApply.readBucketsResolved(spark, indexRoot, im, Some(Seq(b)))
           .map { raw =>
             val live = conf.deletedCol.fold(raw)(d =>

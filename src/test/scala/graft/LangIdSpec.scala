@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.operators.LangId
@@ -132,5 +133,86 @@ class LangIdSpec extends AnyFunSuite with SparkTestBase {
       Seq((1L, "0123456789")).toDF("doc_id", "text"),
       "doc_id", "text", prof).collect()
     assert(pred.length == 1 && pred.head.getString(1) == "en")
+  }
+
+  /** The relational form the row kernel replaced, kept as the
+    * reference: explode the grams, tf per (doc, gram), join the
+    * profile, Σ tf·w per (doc, lang), every language a candidate at
+    * score 0, argmax by (score desc, lang asc).
+    */
+  private def relational(docs: DataFrame, profiles: DataFrame): DataFrame = {
+    val tf = docs
+      .select(col("doc_id"),
+        explode(graft.functions.GraftFunctions.charGrams(col("text")))
+          .as("gram"))
+      .groupBy(col("doc_id"), col("gram"))
+      .agg(count(lit(1)).as("tf"))
+    val scores = tf.join(profiles, "gram")
+      .groupBy(col("doc_id"), col("lang"))
+      .agg(sum(col("tf") * col("w")).as("score"))
+    val best = Window.partitionBy(col("doc_id"))
+      .orderBy(col("score").desc, col("lang"))
+    docs.select(col("doc_id"))
+      .crossJoin(profiles.select(col("lang")).distinct())
+      .join(scores, Seq("doc_id", "lang"), "left")
+      .withColumn("score", coalesce(col("score"), lit(0L)))
+      .withColumn("rn", row_number().over(best))
+      .filter(col("rn") === 1)
+      .select(col("doc_id"), col("lang").as("pred_lang"))
+  }
+
+  test("row kernel equals the relational argmax on random profiles: " +
+      "ties, null and empty text, zero overlap, multi-byte text") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(23)
+    val alphabet = Seq("a", "A", "b", " ", "é", "世", "😀")
+    def word(n: Int): String =
+      Seq.fill(n)(alphabet(rnd.nextInt(alphabet.length))).mkString
+    (1 to 4).foreach { round =>
+      val langs = Seq("de", "en", "fr", "zh").take(2 + round % 3)
+      // weights 1..3 over a tiny gram space: equal scores are common;
+      // a repeated (lang, gram) row adds up, as the join summed it
+      val prof = (for {
+        l <- langs
+        g <- Seq.fill(6)(word(1 + rnd.nextInt(2))).distinct
+      } yield (l, g.toLowerCase, 1L + rnd.nextInt(3))) :+
+        ((langs.head, "a", 1L))
+      val texts = Seq(null, "", "0123456789", "A", "😀😀") ++
+        Seq.fill(40)(word(rnd.nextInt(12)))
+      val docs = texts.zipWithIndex
+        .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+      val profiles = prof.toDF("lang", "gram", "w")
+      val got = LangId.classify(docs, "doc_id", "text", profiles)
+        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+      val want = relational(docs, profiles)
+        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+      assert(got == want, s"round $round")
+      assert(got.size == texts.size)
+      // null, empty and zero-overlap text score 0 everywhere
+      Seq(0L, 1L, 2L).foreach(id => assert(got(id) == langs.head))
+    }
+  }
+
+  test("an empty profile yields no rows") {
+    import spark.implicits._
+    val none = Seq.empty[(String, String, Long)].toDF("lang", "gram", "w")
+    assert(LangId.classify(Seq((1L, "abc")).toDF("doc_id", "text"),
+      "doc_id", "text", none).collect().isEmpty)
+  }
+
+  test("a score of 2^46 or more refuses with an error naming the score") {
+    import spark.implicits._
+    val prof = Seq(("en", "a", 1L << 45), ("fr", "b", 1L))
+      .toDF("lang", "gram", "w")
+    // one occurrence: 2^45, in range
+    assert(LangId.classify(Seq((1L, "a")).toDF("doc_id", "text"),
+      "doc_id", "text", prof).collect().head.getString(1) == "en")
+    // two occurrences: 2^46, refused
+    val e = intercept[Exception](
+      LangId.classify(Seq((1L, "aa")).toDF("doc_id", "text"),
+        "doc_id", "text", prof).collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    assert(msgs.contains(s"score=${1L << 46}"), msgs)
   }
 }

@@ -32,23 +32,17 @@ class PlanGuardSpec extends AnyFunSuite with SparkTestBase {
     "q_subquery_scalar",   // 1-row broadcast scalar-threshold aggregate
     "q_pmi_terms",         // 1-row broadcast corpus-total aggregate
     "q_lm_score",          // 1-row broadcast vocabulary-size aggregate
-    "q_hard_negatives",    // bounded anchor-batch broadcast (k rows,
+    "q_hard_negatives")    // bounded anchor-batch broadcast (k rows,
                            // a training batch — never the corpus);
                            // both appear only on a cold artifact cache
                            // (a warm run serves the persisted table)
-    "q_lang_id_learned")   // |langs|-row (5) candidate-set crossJoin:
-                           // every trained language is a candidate per
-                           // doc — constant work per stream row
 
   /** Queries whose plan legitimately contains an UNPARTITIONED window:
     * the window's input is already metadata-sized (never the data).
     */
   private val globalWindowAllowed = Set(
     "q_pack_sequences",    // offsets window: one row per partition
-    "q_hybrid_search",     // run ranking: window over <= k top-k rows
-    "q_lang_id_learned")   // lang-rank window: one row per trained
-                           // language (|langs| = 5 — the bounded
-                           // profile dimension, never documents)
+    "q_hybrid_search")     // run ranking: window over <= k top-k rows
 
   test("no declared query runs an unpartitioned window over data") {
     import org.apache.spark.sql.execution.window.WindowExec
