@@ -1,8 +1,13 @@
 package graft
 import java.nio.file.{Files, Paths}
+
+import org.apache.logging.log4j.LogManager
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  private val log = LogManager.getLogger("graft.Verify")
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val spark = GraftSession.builder(GraftSession.cpus)
@@ -21,7 +26,7 @@ object Verify {
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        log.error(s"[verify] $name failed: ${e.getMessage}", e)
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -33,7 +33,7 @@ private[queries] object TierCCdc {
     // manifest and aggregated. The oracle computes the same net state
     // directly — updates applied where not superseded by a delete,
     // deleted keys absent — so every layer (bucketing, anti-join,
-    // latest-wins window, tombstones, manifest pointer) is hash-checked,
+    // latest-wins window, tombstones, manifest head) is hash-checked,
     // not just spec-tested.
     "q_cdc_merge" -> ((s, d) =>
       graft.streaming.CdcApply.readSnapshot(s, cdcQueryRoot(s, d)).get
@@ -74,7 +74,8 @@ private[queries] object TierCCdc {
     // commit. The oracle is the pristine batch-0 load (every update
     // reverted, every delete resurrected, versions verbatim), plus the
     // witnessed head: `head_batch = 2` proves the rollback ADVANCED the
-    // watermark — a pointer rewind would read 1 and hash-mismatch.
+    // watermark — a restore that rewound instead would read 1 and
+    // hash-mismatch.
     "q_cdc_restore" -> ((s, d) => {
       val root = cdcRestoreRoot(s, d)
       val wm = graft.streaming.CdcApply.currentVersion(s, root).get

@@ -30,7 +30,7 @@ private[queries] object TierCHelpers {
     * fingerprint-keyed on the input dataset (the
     * [[Tables.eventsByDate]] artifact pattern) and the change stream is
     * a pure function of the supplier table, so the snapshot is built
-    * ONCE per input dataset — the replay guard (`CURRENT >= v<batchId>`)
+    * ONCE per input dataset — the replay guard (`head >= v<batchId>`)
     * turns every later invocation's re-applies into no-op manifest
     * reads.
     */

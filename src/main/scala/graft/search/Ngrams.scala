@@ -114,18 +114,20 @@ object Ngrams {
     // per-doc distinct span windows via the codegen'd [[Shingles]]
     // kernel (the interpreted transform/slice/concat_ws form costs
     // seconds per corpus scan — see Shingles' scaladoc); docs under
-    // spanTokens are filtered up front, so its under-n whole-text
-    // fallback never fires
+    // spanTokens explode nothing, so its under-n whole-text fallback
+    // never fires
     // scan-spread (guide §2.5; no-op at production file counts): the
     // window explode runs once per consumer (count pass + text join)
     // and is the dominant map work — an under-split layout would run
-    // both passes on one core
+    // both passes on one core. The spread frame carries the raw columns
+    // only, and the short-doc test sits inside the generator: as a
+    // filter, the optimizer would push it (and the tokenizer with it)
+    // through the spread onto the under-split scan (see Tables.spread)
     def docSpans = graft.sources.Tables.spread(
-      docs.filter(size(toks) >= spanTokens)
-        .select(col(idCol).as("doc_id"), col(textCol)))
+      docs.select(col(idCol).as("doc_id"), col(textCol)))
       .select(col("doc_id"),
-        explode(array_distinct(
-          TextFunctions.shingles(col(textCol), spanTokens))).as("span"))
+        explode(when(size(toks) >= spanTokens, array_distinct(
+          TextFunctions.shingles(col(textCol), spanTokens)))).as("span"))
     val counts = docSpans
       .select(xxhash64(col("span")).as("h"))
       .groupBy(col("h"))

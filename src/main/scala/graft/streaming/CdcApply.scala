@@ -20,22 +20,24 @@ import graft.operators.Upsert
   * buckets its rows touch:
   *
   * {{{
-  * root/CURRENT                 # pointer: name of the current manifest
-  * root/manifests/v<batch>.<gen>  # immutable manifest (text)
+  * root/manifests/v<batch>.<gen>  # immutable manifest (text): a commit
+  * root/manifests/.after-<name>   # successor claim of manifest <name>
   * root/data/v<batch>/_b=<k>/   # bucket k as rewritten by batch <batch>
   * root/data/v<batch>g<gen>e/_b=<k>/ # maintenance rewrite (tombstone expiry)
- * root/data/v<batch>g<gen>r/_b=<k>/ # maintenance rewrite (rebucket)
+  * root/data/v<batch>g<gen>r/_b=<k>/ # maintenance rewrite (rebucket)
   * }}}
   *
   * A manifest maps every live bucket to the data directory holding its
   * current rows, plus a header fixing the table configuration (keys,
-  * version column, bucket count, tombstone retention). Readers resolve
-  * `CURRENT` → manifest → bucket paths and always see one consistent
-  * snapshot — never a directory mid-rewrite (object stores cannot swap
-  * directories atomically, so pointer indirection is the safe primitive;
-  * it is the same move table formats make with their metadata pointer).
-  * The pointer flip uses `FileContext.rename(OVERWRITE)` — atomic on
-  * HDFS and the local FS, a single small-object swap elsewhere.
+  * version column, bucket count, tombstone retention). A manifest that
+  * exists IS a commit, and the current snapshot is the highest
+  * `(batch, gen)` listed — the Delta log's rule. Readers resolve
+  * listing → manifest → bucket paths and always see one consistent
+  * snapshot, never a directory mid-rewrite. Every commit names a
+  * successor above its predecessor and lands with a no-overwrite
+  * rename after claiming the predecessor's successor slot (see
+  * [[commitManifest]]), so a lost race never leaves a listed manifest
+  * behind.
   *
   * Scale shape: each apply is one (key, version)-dedup + anti-join +
   * merge window over batch ∪ TOUCHED buckets only — O(touched data),
@@ -72,8 +74,8 @@ import graft.operators.Upsert
   * the schema it committed with.
   *
   * Exactly-once, in three layers:
-  *  - a REPLAYED batch (crash after the pointer flip, before the
-  *    stream checkpoint commit) is detected by `CURRENT >= v<batchId>`
+  *  - a REPLAYED batch (crash after the manifest landed, before the
+  *    stream checkpoint commit) is detected by `head >= v<batchId>`
   *    and skipped outright. Corollary: one snapshot root belongs to ONE
   *    streaming-checkpoint lineage. Restarting with a FRESH stream
   *    checkpoint against an existing root resets batch ids to 0 and
@@ -258,7 +260,7 @@ object CdcApply {
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Open ONCE and read to EOF: a stat-then-read pair could tear across
-    * a concurrent pointer flip (old length, new content).
+    * a concurrent tag move (old length, new content).
     */
   private[streaming] def readSmallFile(fs: FileSystem, p: Path): String = {
     def readVia(f: FileSystem): String = {
@@ -274,15 +276,15 @@ object CdcApply {
     try readVia(fs)
     catch {
       // Hadoop's LOCAL ChecksumFs renames a file and its .crc sidecar
-      // as two separate operations, so a reader racing a pointer flip
-      // (or a crash-retry manifest recommit) can transiently observe
-      // the just-renamed data file against the predecessor's crc and
-      // fail verification. The data-file rename itself IS atomic —
-      // re-read through the raw (non-verifying) filesystem; content
-      // integrity still holds because every caller parses a strict
-      // format (manifest name / manifest body / tag line). Cluster
-      // filesystems (HDFS, object stores) keep no sidecars, so this
-      // branch is local-mode-only by construction.
+      // as two separate operations, so a reader racing a tag move
+      // (`tag(replace = true)`, a rename with OVERWRITE) can
+      // transiently observe the just-renamed data file against the
+      // predecessor's crc and fail verification. The data-file rename
+      // itself IS atomic — re-read through the raw (non-verifying)
+      // filesystem; content integrity still holds because every caller
+      // parses a strict format (manifest name / manifest body / tag
+      // line). Cluster filesystems (HDFS, object stores) keep no
+      // sidecars, so this branch is local-mode-only by construction.
       case _: org.apache.hadoop.fs.ChecksumException =>
         fs match {
           case c: org.apache.hadoop.fs.ChecksumFileSystem =>
@@ -298,32 +300,55 @@ object CdcApply {
     finally out.close()
   }
 
-  /** Name of the manifest `CURRENT` points at (`v<batch>.<gen>`), or
-    * None before the first apply.
+  /** Write `content` to a fresh dot-prefixed temp beside `target`, then
+    * rename it onto `target`, so no reader ever sees a partly written
+    * file. Without `Options.Rename.OVERWRITE` the rename refuses an
+    * existing target and this returns false. The temp name is unique
+    * per call, so writers racing on one target never share a temp; a
+    * crash between the two steps leaves a dot-prefixed temp that no
+    * listing here reads. A rename without OVERWRITE is atomic on HDFS.
+    * Hadoop's local filesystem checks the target and then renames, so
+    * two processes racing on one local root can both pass the check.
     */
-  def currentManifestName(spark: SparkSession, root: String)
-      : Option[String] = {
-    val fs = fsFor(spark, root)
-    val ptr = new Path(root, "CURRENT")
-    // CURRENT existed, so if it is gone now a pointer flip is under way:
-    // on the local filesystem a rename with OVERWRITE deletes the old
-    // pointer before it renames the new one in. Read again.
-    def read(retries: Int): String =
-      try readSmallFile(fs, ptr).trim
-      catch {
-        case _: java.io.FileNotFoundException if retries > 0 =>
-          Thread.sleep(1)
-          read(retries - 1)
-      }
-    if (!fs.exists(ptr)) None else Some(read(1000))
+  private def renameInto(spark: SparkSession, target: Path, content: String,
+      opts: Options.Rename*): Boolean = {
+    val fs = fsFor(spark, target.toString)
+    val tmp = new Path(target.getParent,
+      s".${java.util.UUID.randomUUID()}.tmp")
+    writeSmallFile(fs, tmp, content)
+    try {
+      FileContext.getFileContext(target.toUri,
+        spark.sparkContext.hadoopConfiguration).rename(tmp, target, opts: _*)
+      true
+    } catch {
+      case _: org.apache.hadoop.fs.FileAlreadyExistsException =>
+        fs.delete(tmp, false)
+        false
+    }
   }
 
-  /** The batch id `CURRENT` covers, or None before the first apply.
-    * Maintenance rewrites bump only the generation, never the batch id,
-    * so this is exactly the replay-guard watermark.
+  /** Name of the current manifest (`v<batch>.<gen>`): the highest
+    * committed one listed. None before the first apply.
+    */
+  def currentManifestName(spark: SparkSession, root: String)
+      : Option[String] =
+    listManifests(fsFor(spark, root), root).maxByOption(parseManifestName)
+
+  /** The batch id the current manifest covers, or None before the
+    * first apply. Maintenance rewrites bump only the generation, never
+    * the batch id, so this is exactly the replay-guard watermark.
     */
   def currentVersion(spark: SparkSession, root: String): Option[Long] =
     currentManifestName(spark, root).map(parseManifestName(_)._1)
+
+  /** The highest retained generation of batch `batchId`, the manifest
+    * time travel to that batch reads. None when it is not retained.
+    */
+  private def manifestOfBatch(spark: SparkSession, root: String,
+      batchId: Long): Option[String] =
+    listManifests(fsFor(spark, root), root)
+      .filter(parseManifestName(_)._1 == batchId)
+      .maxByOption(parseManifestName)
 
   private def parseManifestName(name: String): (Long, Int) = {
     val core = name.stripPrefix("v")
@@ -332,12 +357,13 @@ object CdcApply {
   }
 
   /** Committed manifest names under `manifests/` — only names that parse
-    * as `v<batch>.<gen>`, which excludes the dot-prefixed rename temps a
-    * crash mid-[[commitManifest]] can leave behind.
+    * as `v<batch>.<gen>`, which excludes the dot-prefixed claims and
+    * rename temps of [[commitManifest]]. Empty before the first apply.
     */
-  private def listManifests(fs: FileSystem, mdir: Path): Seq[String] =
-    fs.listStatus(mdir).map(_.getPath.getName).toSeq
-      .filter(n => scala.util.Try(parseManifestName(n)).isSuccess)
+  private def listManifests(fs: FileSystem, root: String): Seq[String] =
+    try fs.listStatus(new Path(root, "manifests")).map(_.getPath.getName)
+      .toSeq.filter(n => scala.util.Try(parseManifestName(n)).isSuccess)
+    catch { case _: java.io.FileNotFoundException => Seq.empty }
 
   private def serializeManifest(m: Manifest): String = {
     val c = m.conf
@@ -437,8 +463,8 @@ object CdcApply {
       root: String): Option[Manifest] =
     currentManifestName(spark, root).map(readManifest(spark, root, _))
 
-  /** CURRENT manifest together with the batch id its NAME carries —
-    * ONE pointer read, so a caller needing (manifest, version) as an
+  /** Current manifest together with the batch id its NAME carries —
+    * ONE head resolution, so a caller needing (manifest, version) as an
     * atomic pair (Rollup's touched-bucket pruning stamps its watermark
     * with the version) cannot tear across a concurrent commit: a
     * separate `currentVersion` re-read could return a NEWER batch than
@@ -452,10 +478,10 @@ object CdcApply {
     currentManifestName(spark, root).map(n =>
       (readManifest(spark, root, n), parseManifestName(n)._1))
 
-  /** CURRENT's (name, batch id) from ONE pointer read — what a sync's
-    * carried-forward watermark commit records as its fence expectation:
-    * the commit may only flip the pointer if it still names what the
-    * watermark was read from (see [[commitManifest]]'s `expectCurrent`).
+  /** The head's (name, batch id) from ONE resolution — what a sync's
+    * carried-forward watermark commit records as its predecessor: the
+    * commit may only land while the head is still the manifest the
+    * watermark was read from (see [[commitManifest]]'s `pred`).
     */
   private[streaming] def currentNameAndVersion(spark: SparkSession,
       root: String): Option[(String, Long)] =
@@ -463,7 +489,7 @@ object CdcApply {
       (n, parseManifestName(n)._1))
 
   /** Manifest by NAME — immutable once committed, so a name-addressed
-    * read pairs atomically with the pointer read that produced it.
+    * read pairs atomically with the head resolution that produced it.
     */
   private[streaming] def manifestByName(spark: SparkSession,
       root: String, name: String): Manifest =
@@ -645,13 +671,8 @@ object CdcApply {
     * generation for the batch is used.
     */
   def readSnapshotAt(spark: SparkSession, root: String,
-      batchId: Long): Option[DataFrame] = {
-    val fs = fsFor(spark, root)
-    val dir = new Path(root, "manifests")
-    if (!fs.exists(dir)) None
-    else listManifests(fs, dir)
-      .filter(n => parseManifestName(n)._1 == batchId)
-      .sortBy(parseManifestName(_)._2).lastOption
+      batchId: Long): Option[DataFrame] =
+    manifestOfBatch(spark, root, batchId)
       .flatMap { name =>
         val m = readManifest(spark, root, name)
         // that manifest's OWN schema AND rename state: time travel to
@@ -663,7 +684,6 @@ object CdcApply {
         readBucketsResolved(spark, root, m)
           .map(df => applyRenames(stripInternal(df, m.conf), m))
       }
-  }
 
   /** Resolve a point in time to a batch id: the latest retained batch
     * whose commit timestamp is <= `ts` (epoch millis). This is the
@@ -677,11 +697,8 @@ object CdcApply {
     * older batch that happens to carry a larger timestamp.
     */
   def resolveAsOf(spark: SparkSession, root: String, ts: Long)
-      : Option[Long] = {
-    val fs = fsFor(spark, root)
-    val mdir = new Path(root, "manifests")
-    if (!fs.exists(mdir)) None
-    else listManifests(fs, mdir)
+      : Option[Long] =
+    listManifests(fsFor(spark, root), root)
       .groupBy(parseManifestName(_)._1).toSeq
       .map { case (b, names) =>
         val top = names.sortBy(parseManifestName(_)._2).last
@@ -689,7 +706,6 @@ object CdcApply {
       }
       .collect { case (b, Some(t)) if t <= ts => b }
       .sorted.lastOption
-  }
 
   /** Time travel by timestamp: [[resolveAsOf]] then [[readSnapshotAt]].
     * None when no batch had committed by `ts`.
@@ -719,34 +735,22 @@ object CdcApply {
     * time-travelable past the retention window until untagged, the
     * real-table-format contract). Write-temp + rename without
     * overwrite: a duplicate create fails loudly (pass `replace = true`
-    * to move an existing tag). Tagging is lifecycle metadata, not a
-    * data write — but it extends storage retention, so the SQL entry
-    * point gates it like maintenance.
+    * to move an existing tag, a rename with OVERWRITE). Tagging is
+    * lifecycle metadata, not a data write — but it extends storage
+    * retention, so the SQL entry point gates it like maintenance.
     */
   def tag(spark: SparkSession, root: String, name: String, batch: Long,
       replace: Boolean = false): Unit = {
     requireTagName(name)
-    val fs = fsFor(spark, root)
-    require(listManifests(fs, new Path(root, "manifests"))
-      .exists(n => parseManifestName(n)._1 == batch),
+    require(manifestOfBatch(spark, root, batch).isDefined,
       s"tag '$name': batch $batch is not a retained committed batch " +
         s"of $root")
-    fs.mkdirs(tagsDir(root))
-    val fc = FileContext.getFileContext(new Path(root).toUri,
-      spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(tagsDir(root), s".$name.tmp")
-    writeSmallFile(fs, tmp, s"$batch ${System.currentTimeMillis()}")
-    val target = new Path(tagsDir(root), name)
-    if (replace) fc.rename(tmp, target, Options.Rename.OVERWRITE)
-    else
-      try fc.rename(tmp, target)
-      catch {
-        case e: org.apache.hadoop.fs.FileAlreadyExistsException =>
-          fs.delete(tmp, false)
-          throw new IllegalStateException(
-            s"tag '$name' already exists on $root — pass replace = " +
-              "true to move it", e)
-      }
+    val opts = if (replace) Seq(Options.Rename.OVERWRITE) else Seq.empty
+    if (!renameInto(spark, new Path(tagsDir(root), name),
+        s"$batch ${System.currentTimeMillis()}", opts: _*))
+      throw new IllegalStateException(
+        s"tag '$name' already exists on $root — pass replace = " +
+          "true to move it")
   }
 
   /** Drop the named tag; returns whether it existed. The batch it
@@ -800,8 +804,8 @@ object CdcApply {
     tagEntries(spark, root).map(_._2).toSet
 
   /** Commit history of the table — one row per retained manifest:
-    * batch id, maintenance generation, whether it is the CURRENT
-    * pointer target, bucket count, and the committed column names.
+    * batch id, maintenance generation, whether it is the head (the
+    * highest listed), bucket count, and the committed column names.
     * Time-travelable batches are exactly the rows here (maintenance
     * generations rewrite layout, not content — the highest generation
     * per batch is what [[readSnapshotAt]] serves). Driver-side listing
@@ -809,22 +813,17 @@ object CdcApply {
     * a table format's DESCRIBE HISTORY.
     */
   def history(spark: SparkSession, root: String): DataFrame = {
-    val fs = fsFor(spark, root)
-    val mdir = new Path(root, "manifests")
-    val cur = currentManifestName(spark, root)
-    val rows =
-      if (!fs.exists(mdir)) Seq.empty
-      else listManifests(fs, mdir)
-        .sortBy { n => val (b, g) = parseManifestName(n); (b, g) }
-        .map { n =>
-          val (b, g) = parseManifestName(n)
-          val m = readManifest(spark, root, n)
-          (b, g, cur.contains(n), m.buckets.size,
-            m.schema.map(_.fieldNames
-              .filterNot(n => n == TsBatchCol || n == AppliedBatchCol)
-              .toSeq)
-              .getOrElse(Seq.empty), m.ts)
-        }
+    val names = listManifests(fsFor(spark, root), root)
+      .sortBy(parseManifestName)
+    val rows = names.map { n =>
+      val (b, g) = parseManifestName(n)
+      val m = readManifest(spark, root, n)
+      (b, g, n == names.last, m.buckets.size,
+        m.schema.map(_.fieldNames
+          .filterNot(n => n == TsBatchCol || n == AppliedBatchCol)
+          .toSeq)
+          .getOrElse(Seq.empty), m.ts)
+    }
     spark.createDataFrame(rows)
       .toDF("batch_id", "generation", "is_current", "n_buckets",
         "columns", "commit_ts")
@@ -923,7 +922,8 @@ object CdcApply {
     * deciding on vacuum / rebucket / re-seed.
     */
   def describe(spark: SparkSession, root: String): DataFrame = {
-    val rows = currentManifestName(spark, root).toSeq.map { name =>
+    val all = listManifests(fsFor(spark, root), root)
+    val rows = all.maxByOption(parseManifestName).toSeq.map { name =>
       val (batch, gen) = parseManifestName(name)
       val m = readManifest(spark, root, name)
       // totals cover base AND pending merge-on-read delta directories
@@ -937,9 +937,7 @@ object CdcApply {
       def total(xs: Seq[Option[Long]]): Option[Long] =
         if (xs.nonEmpty && xs.forall(_.isDefined)) Some(xs.flatten.sum)
         else None
-      val fs = fsFor(spark, root)
-      val retained = listManifests(fs, new Path(root, "manifests"))
-        .map(parseManifestName(_)._1).distinct.size
+      val retained = all.map(parseManifestName(_)._1).distinct.size
       (batch, gen, m.ts, m.conf.numBuckets, m.buckets.size,
         total(sizes), total(counts), retained,
         m.buckets.valuesIterator.map(_.deltas.size).sum,
@@ -1127,9 +1125,9 @@ object CdcApply {
     * current data contains tombstones older than the retention window
     * are rewritten without them (to a new GENERATION of the current
     * batch id — `data/v<batch>g<gen>` — so the replay-guard watermark
-    * never moves) and `CURRENT` flips to the new manifest before the
-    * delete pass runs. Run out-of-band on a schedule, exactly like a
-    * table format's vacuum + expire-snapshots pair.
+    * never moves), committed as the new head before the delete pass
+    * runs. Run out-of-band on a schedule, exactly like a table
+    * format's vacuum + expire-snapshots pair.
     *
     * Returns the names of removed manifests and data directories.
     */
@@ -1137,28 +1135,26 @@ object CdcApply {
       expireTombstones: Boolean = true): Seq[String] = {
     require(keep >= 1, "must keep at least the current snapshot")
     val fs = fsFor(spark, root)
-    if (!fs.exists(new Path(root, "CURRENT"))) return Seq.empty
-
-    if (expireTombstones) expireCurrentTombstones(spark, root)
-
-    val curName = currentManifestName(spark, root).get
+    if (expireTombstones) currentManifestName(spark, root)
+      .foreach(expireHeadTombstones(spark, root, _))
+    val all = listManifests(fs, root).sortBy(parseManifestName)
+    if (all.isEmpty) return Seq.empty
+    val curName = all.last
     val mdir = new Path(root, "manifests")
-    val all = listManifests(fs, mdir)
-      .sortBy { n => val (b, g) = parseManifestName(n); (b, g) }
     // retention counts BATCHES, not manifest files: a tombstone-expiry
     // generation adds a manifest for an existing batch and must not
     // shorten the time-travel window. Within a retained batch only the
     // HIGHEST generation survives — logical content is identical and a
     // superseded generation still references the pre-expiry data dirs,
     // which would otherwise stay live (and keep "expired" tombstone
-    // bytes on disk) forever on a quiesced table. EXCEPTION: the CURRENT
-    // batch keeps its top TWO generations — an expiry flip may have just
-    // happened in this very run, and a reader that resolved CURRENT
-    // moments before must not have its data dirs deleted out from under
-    // it (the "keep >= 2 leaves in-flight readers unbroken" contract).
-    // The superseded generation collapses on the NEXT vacuum after the
-    // stream moves CURRENT to a newer batch; on a quiesced table the
-    // leftover is one generation of one batch — bounded.
+    // bytes on disk) forever on a quiesced table. EXCEPTION: the head
+    // batch keeps its top TWO generations — an expiry commit may have
+    // just happened in this very run, and a reader that resolved the
+    // head moments before must not have its data dirs deleted out from
+    // under it (the "keep >= 2 leaves in-flight readers unbroken"
+    // contract). The superseded generation collapses on the NEXT vacuum
+    // after the stream moves the head to a newer batch; on a quiesced
+    // table the leftover is one generation of one batch — bounded.
     val curBatchId = parseManifestName(curName)._1
     // tagged batches are PINNED: a tag is a promise that the snapshot
     // stays time-travelable, so retention never sweeps it (manifest,
@@ -1218,29 +1214,19 @@ object CdcApply {
         .filter(n => scala.util.Try(n.stripPrefix("b").toLong).toOption
           .exists(b => b <= curBatchId && !keptBatches.contains(b)))
     doomedCl.foreach(n => fs.delete(new Path(cldir, n), true))
-    // crash-orphaned pointer temps (.CURRENT.<batch>.tmp left between
-    // the temp write and the rename) accumulate forever otherwise; only
-    // temps at or below the committed watermark can be leftovers — a
-    // temp beyond it may belong to an apply mid-commit right now
-    fs.listStatus(new Path(root)).map(_.getPath.getName)
-      .filter(_.startsWith(".CURRENT."))
-      .filter(n => scala.util.Try(
-        n.stripPrefix(".CURRENT.").stripSuffix(".tmp").toLong)
-        .toOption.exists(_ <= curBatchId))
-      .foreach(n => fs.delete(new Path(root, n), false))
     (doomedManifests ++ doomedData ++ doomedCl.map(n => s"changelog/$n"))
       .toSeq
   }
 
-  /** Rewrite buckets holding expired tombstones (see [[vacuum]]). The
-    * dirty set comes straight from the manifest's per-bucket oldest-
-    * tombstone metadata — vacuum reads ZERO data files to decide what to
-    * rewrite, so at 100 TB a sweep over a mostly-clean table is a
-    * manifest read plus a rewrite of only the buckets that need it.
+  /** Rewrite the buckets of head manifest `name` that hold expired
+    * tombstones (see [[vacuum]]). The dirty set comes straight from the
+    * manifest's per-bucket oldest-tombstone metadata — vacuum reads ZERO
+    * data files to decide what to rewrite, so at 100 TB a sweep over a
+    * mostly-clean table is a manifest read plus a rewrite of only the
+    * buckets that need it.
     */
-  private def expireCurrentTombstones(spark: SparkSession,
-      root: String): Unit = {
-    val name = currentManifestName(spark, root).get
+  private def expireHeadTombstones(spark: SparkSession, root: String,
+      name: String): Unit = {
     val (batchId, gen) = parseManifestName(name)
     val m = readManifest(spark, root, name)
     val conf = m.conf
@@ -1257,7 +1243,6 @@ object CdcApply {
         // never clobber the winner's committed bucket dirs — the misuse
         // surfaces as a loud manifest-commit failure, not corruption
         val dirTag = s"v${batchId}g${gen + 1}e"
-        claimMaintenanceTarget(spark, root, name, batchId, gen + 1)
         // resolved read: a merge-on-read bucket's superseded delta rows
         // must not survive into the rewrite (the rewrite doubles as
         // that bucket's compaction — its pending deltas clear)
@@ -1269,19 +1254,16 @@ object CdcApply {
           .parquet(new Path(root, s"data/$dirTag").toString)
         val written = writtenEntries(spark, root, dirTag,
           hasTombstones = true)
-        // commit guard: if the STREAM advanced CURRENT while this
-        // rewrite ran, flipping to a manifest of the older batch id
-        // would roll the table back past a committed batch (and the
-        // replay guard would then drop it — silent data loss). Abort
-        // instead; the orphaned rewrite dir is swept by a later vacuum.
-        // The decision is the commit fence's claim (CAS-grade on
-        // HDFS-semantics stores), not a check-then-flip window.
+        // commit guard: if the STREAM committed a batch while this
+        // rewrite ran, the generation's predecessor is no longer the
+        // head and the commit aborts (see [[commitManifest]]); the
+        // orphaned rewrite dir is swept by a later vacuum.
         // carry the ORIGINAL commit timestamp: a maintenance
         // generation rewrites layout, not logical content
         commitMaintenance(spark, root, s"v$batchId.${gen + 1}",
           Manifest(conf, (m.buckets -- dirty) ++ written, m.schema,
             m.ts, m.renames),
-          batchId, pred = name)
+          pred = name)
       }
     }
   }
@@ -1303,7 +1285,7 @@ object CdcApply {
     *    timestamp is carried forward so as-of-timestamp reads resolve
     *    identically before and after;
     *  - the commit guard aborts (returning false) if the stream
-    *    advanced `CURRENT` during the rewrite — the orphaned directory
+    *    committed during the rewrite — the orphaned directory
     *    is swept by a later [[vacuum]]; one maintenance process per
     *    table root remains the operating assumption;
     *  - the superseded generation's directories stay live for in-flight
@@ -1379,11 +1361,10 @@ object CdcApply {
     val next = m.renames.filterNot(_._1 == fromStored) ++
       (if (to == fromStored) Seq.empty else Seq(fromStored -> to))
     // the rebucket commit pattern: metadata-only maintenance, new
-    // generation, loud on a concurrent flip (claim-fenced — and
-    // because the fence runs BEFORE the manifest rename, a lost race
-    // leaves no half-landed rename for listing-based readers)
+    // generation, loud on a concurrent commit (a lost race lands no
+    // manifest, so listing-based readers never see the rename)
     if (commitMaintenance(spark, root, s"v$batchId.${gen + 1}",
-        m.copy(renames = next), batchId, pred = name)) true
+        m.copy(renames = next), pred = name)) true
     else throw new IllegalStateException(
       s"concurrent commit moved $root during rename — retry")
   }
@@ -1402,7 +1383,6 @@ object CdcApply {
         // dirs make a concurrent expiry/rebucket misuse unable to
         // overwrite each other's files
         val dirTag = s"v${batchId}g${gen + 1}r"
-        claimMaintenanceTarget(spark, root, name, batchId, gen + 1)
         if (m.buckets.nonEmpty) {
           // resolved read: re-keying must not carry superseded
           // merge-on-read delta rows into the new layout (a rebucket
@@ -1417,7 +1397,7 @@ object CdcApply {
           hasTombstones = conf.deletedCol.isDefined)
         commitMaintenance(spark, root, s"v$batchId.${gen + 1}",
           Manifest(conf, written, m.schema, m.ts, m.renames),
-          batchId, pred = name)
+          pred = name)
     }
   }
 
@@ -1475,7 +1455,6 @@ object CdcApply {
           m.schema.forall(_.fieldNames.contains(c)),
           s"zorderBuckets: no column '$c' in the table schema"))
         val dirTag = s"v${batchId}g${gen + 1}z"
-        claimMaintenanceTarget(spark, root, name, batchId, gen + 1)
         val resolved = readBucketsResolved(spark, root, m, None).get
         val aged = conf.deletedCol.fold(resolved)(d =>
           resolved.filter(!(coalesce(col(d), lit(false)) &&
@@ -1508,7 +1487,7 @@ object CdcApply {
           hasTombstones = conf.deletedCol.isDefined)
         commitMaintenance(spark, root, s"v$batchId.${gen + 1}",
           Manifest(conf, written, m.schema, m.ts, m.renames),
-          batchId, pred = name)
+          pred = name)
     }
 
   /** Scheduled compaction for merge-on-read tables: fold the pending
@@ -1525,12 +1504,11 @@ object CdcApply {
     * zero-resolution fast path early. Cost: O(selected buckets'
     * data) — one resolved read + one rebalanced write, the same class
     * as tombstone expiry. Same maintenance contract as [[rebucket]]:
-    * commit-guard abort on a concurrent apply (orphan swept by
-    * [[vacuum]]), loud manifest-rename failure on concurrent
-    * maintenance, superseded directories collapse under vacuum's
-    * generation rules. Returns true when a new generation committed;
-    * false when no selected bucket holds a pending delta or the guard
-    * aborted.
+    * commit-guard abort on a concurrent apply or maintenance commit
+    * (orphan swept by [[vacuum]]), superseded directories collapse
+    * under vacuum's generation rules. Returns true when a new
+    * generation committed; false when no selected bucket holds a
+    * pending delta or the guard aborted.
     */
   def compactBuckets(spark: SparkSession, root: String,
       bucketIds: Option[Seq[Int]] = None): Boolean =
@@ -1549,7 +1527,6 @@ object CdcApply {
           // and rebucket 'r' (and distinct from an inline-compact
           // apply's `v<batch>c`, which never coexists with gen > 0)
           val dirTag = s"v${batchId}g${gen + 1}c"
-          claimMaintenanceTarget(spark, root, name, batchId, gen + 1)
           val resolved = readBucketsResolved(spark, root, m,
             Some(targets)).get
           // a rewrite is when tombstones age (same clock as a merge)
@@ -1567,7 +1544,7 @@ object CdcApply {
           commitMaintenance(spark, root, s"v$batchId.${gen + 1}",
             Manifest(conf, (m.buckets -- targets) ++ written,
               m.schema, m.ts, m.renames),
-            batchId, pred = name)
+            pred = name)
         }
     }
 
@@ -1699,8 +1676,8 @@ object CdcApply {
     * CURRENT schema (restore rewinds content, not DDL).
     *
     * Contract mirrors the other single-writer ops: the commit carries
-    * the apply-race fence (a concurrent apply/maintenance flip fails
-    * loudly) and `overwrite = false`. The head ADVANCES — a streaming
+    * the apply-race fence (a concurrent apply or maintenance commit
+    * fails it loudly). The head ADVANCES — a streaming
     * feed into this table must resume with batch ids above the new
     * head or its next batches no-op on the replay guard, the same
     * caveat as any out-of-band administrative write. When the table
@@ -1723,9 +1700,7 @@ object CdcApply {
       s"cannot restore $root to batch $targetBatch: head is $head")
     if (targetBatch == head) return None
     val fs = fsFor(spark, root)
-    val tgtName = listManifests(fs, new Path(root, "manifests"))
-      .filter(n => parseManifestName(n)._1 == targetBatch)
-      .sortBy(parseManifestName(_)._2).lastOption
+    val tgtName = manifestOfBatch(spark, root, targetBatch)
       .getOrElse(throw new IllegalArgumentException(
         s"batch $targetBatch of $root is not retained (vacuumed?) — " +
           "restorable batches are exactly history()'s rows"))
@@ -1855,8 +1830,7 @@ object CdcApply {
           Some(stored),
           Some(commitTs.getOrElse(System.currentTimeMillis())),
           mCur.renames),
-        newBatch, overwrite = false,
-        expectCurrent = Some(Some(curName)))
+        pred = Some(curName))
       Some(newBatch)
     } finally changed.unpersist()
   }
@@ -2084,12 +2058,7 @@ object CdcApply {
       fromBatch: Long, toBatch: Long): Option[DataFrame] = {
     require(fromBatch <= toBatch,
       s"fromBatch $fromBatch must be <= toBatch $toBatch")
-    val fs = fsFor(spark, root)
-    val mdir = new Path(root, "manifests")
-    if (!fs.exists(mdir)) return None
-    listManifests(fs, mdir)
-      .filter(n => parseManifestName(n)._1 == toBatch)
-      .sortBy(parseManifestName(_)._2).lastOption
+    manifestOfBatch(spark, root, toBatch)
       .flatMap(name => changesInManifest(spark, root,
         readManifest(spark, root, name), fromBatch))
   }
@@ -2174,8 +2143,8 @@ object CdcApply {
       case None => false
       case Some(src) =>
         val cur = currentVersion(spark, root).get
-        // ONE pointer read serves the watermark AND the fence
-        // expectation of the carried-forward commit below
+        // ONE head resolution serves the watermark AND the
+        // predecessor of the carried-forward commit below
         val mirrorCur = currentManifestName(spark, mirrorRoot)
         val wm = mirrorCur.map(parseManifestName(_)._1).getOrElse(-1L)
         if (wm >= cur) false
@@ -2215,24 +2184,18 @@ object CdcApply {
           // anyway, or every later poll re-resolves and re-scans the
           // same ever-growing batch range just to learn "nothing"
           if (!applied) {
-            // fenced on the SAME pointer read the watermark came from:
-            // a concurrent sync process that applied a data-bearing
-            // batch in between must not have its commit overwritten by
-            // this stale carried-forward map (the pointer would move
-            // BACKWARD and drop its rows) — the loser throws instead
-            mirrorCur.map(manifestByName(spark, mirrorRoot, _)) match {
-              case Some(mm) =>
-                commitManifest(spark, mirrorRoot, s"v$cur.0",
-                  mm.copy(ts = Some(ts)), cur,
-                  expectCurrent = Some(mirrorCur))
-              case None =>
-                // first-ever sync over an empty feed: an empty mirror
-                // table at the source's watermark
-                commitManifest(spark, mirrorRoot, s"v$cur.0",
-                  Manifest(c.copy(numBuckets = numBuckets), Map.empty,
-                    None, Some(ts)), cur,
-                  expectCurrent = Some(mirrorCur))
-            }
+            // fenced on the SAME head the watermark came from: a
+            // concurrent sync process that applied a data-bearing batch
+            // in between must not be superseded by this stale
+            // carried-forward map (it would drop that batch's rows) —
+            // the loser throws instead
+            // (first-ever sync over an empty feed: an empty mirror
+            // table at the source's watermark)
+            val mm = mirrorCur.map(manifestByName(spark, mirrorRoot, _))
+              .getOrElse(Manifest(c.copy(numBuckets = numBuckets),
+                Map.empty, None, None))
+            commitManifest(spark, mirrorRoot, s"v$cur.0",
+              mm.copy(ts = Some(ts)), pred = mirrorCur)
           }
           true
         }
@@ -2275,7 +2238,7 @@ object CdcApply {
         if (!applied)
           commitManifest(spark, mirrorRoot, s"v$cur.0",
             Manifest(c.copy(numBuckets = numBuckets), Map.empty, None,
-              Some(ts)), cur, expectCurrent = Some(None))
+              Some(ts)), pred = None)
         true
     }
 
@@ -2312,38 +2275,6 @@ object CdcApply {
         ()
       }
       .start()
-
-  /** Crash recovery for a maintenance op targeting generation `gen` of
-    * `batchId` while `CURRENT` still points at `curName`: a manifest
-    * named `v<batchId>.<gen>` can already exist ONLY if a prior
-    * maintenance run crashed between its manifest rename and the
-    * pointer flip — that manifest was never CURRENT (the flip follows
-    * the rename immediately), so deleting it is safe (readers could
-    * have discovered it only through listings, the same narrow exposure
-    * vacuum's generation collapse already carries) and unblocks the
-    * retry, which recommits the same logical content. A LIVE concurrent
-    * maintenance process — already a violation of the one-maintenance-
-    * process-per-table contract — is USUALLY caught loudly: the
-    * no-overwrite manifest rename in [[commitManifest]] fails when both
-    * processes reach commit. One narrow window remains: if op B's claim
-    * check lands between op A's manifest rename and A's pointer flip, B
-    * sees CURRENT unmoved, deletes A's just-renamed manifest as an
-    * orphan, and A's flip leaves CURRENT pointing at a deleted manifest
-    * until B recommits — readers crash in that interval rather than
-    * fail at commit time. The CURRENT re-check immediately before the
-    * delete below narrows the window to the check→delete gap; only the
-    * documented single-process contract closes it (the same residual
-    * any rename-based table-format commit carries without a lock
-    * service).
-    */
-  private def claimMaintenanceTarget(spark: SparkSession, root: String,
-      curName: String, batchId: Long, gen: Int): Unit = {
-    val fs = fsFor(spark, root)
-    val orphan = new Path(root, s"manifests/v$batchId.$gen")
-    if (fs.exists(orphan) &&
-        currentManifestName(spark, root).contains(curName))
-      fs.delete(orphan, false)
-  }
 
   /** The scheduled half of the bucket-evolution story: rebucket when
     * the layout has outgrown its creation-time count. If any live
@@ -2477,159 +2408,84 @@ object CdcApply {
     Some(acc)
   }
 
-  /** Write the manifest file, then atomically flip `CURRENT` to it.
-    * BOTH writes are write-temp + rename: CURRENT so a reader sees the
-    * old or the new pointer, and the manifest itself because
-    * listing-based readers ([[readSnapshotAt]], [[history]], vacuum's
-    * kept-set) discover manifests by name, not through CURRENT — a
-    * plain create would let them observe a mid-write file (a torn line
-    * crashes the parser; a line-boundary tear parses as a silently
-    * incomplete snapshot). The dot-prefixed temp name keeps the
-    * in-flight file out of those listings.
-    */
-  /** Test seam for the apply-race fence: a one-shot callback consumed
-    * inside the fenced commit, between the manifest rename and the
-    * CURRENT-pointer check — exactly the window a concurrent applier's
-    * commit lands in. Production value is null (no-op).
+  /** Test seam for the commit race: a one-shot callback consumed inside
+    * [[commitManifest]] after its head check and before its claim — the
+    * window in which only the claim can see a concurrent commit.
+    * Production value is null (no-op).
     */
   private[graft] val raceWindowHook =
     new java.util.concurrent.atomic.AtomicReference[() => Unit](null)
 
+  /** Commit manifest `m` as `name`, the successor of head `pred` (None
+    * for the table's first commit). A manifest that exists in
+    * `manifests/` IS a commit and the head is the highest one listed,
+    * so every commit kind — applies, [[restore]], mirror/rollup/index
+    * syncs and maintenance generations — takes the same three steps:
+    *
+    *  1. check the head. If it is no longer `pred`, a concurrent
+    *     committer published a state this op never read; publishing
+    *     over it would drop that commit (a lost apply's retry would
+    *     then no-op on the replay guard, and maintenance would roll the
+    *     table back). Refuse.
+    *  2. claim `pred`'s successor slot, `manifests/.after-<pred>`
+    *     (`.after-genesis` for the first commit), holding `name`. One
+    *     claimant wins; a slot holding another name refuses. A slot
+    *     holding `name` is this commit's own crash-retry and proceeds.
+    *  3. land the manifest with a no-overwrite rename. If `name` exists
+    *     already, a concurrent committer of the same name won (two
+    *     appliers of one batch id): refuse.
+    *
+    * A lost race throws ConcurrentModificationException before its
+    * manifest lands, so no reader, [[history]] or time travel ever sees
+    * it. Both files land write-temp + rename ([[renameInto]]), never
+    * half-written: a torn manifest line would crash the parser, or
+    * parse as a silently incomplete snapshot.
+    *
+    * `name` must sort above `pred`, or the listing would not resolve to
+    * the commit just made. The replay guard, [[restore]]'s `head + 1`,
+    * the sync watermarks and maintenance's `gen + 1` all ensure it.
+    *
+    * Caveats: claim and landing are atomic where a rename without
+    * overwrite is (HDFS); on Hadoop's local filesystem a root assumes
+    * one writing process. A committer that dies between claim and
+    * landing leaves the slot claimed: its own retry (same name) lands,
+    * and every other commit refuses until then.
+    */
   private[streaming] def commitManifest(spark: SparkSession, root: String,
-      name: String, m: Manifest, batchId: Long,
-      overwrite: Boolean = true,
-      expectCurrent: Option[Option[String]] = None): Unit = {
-    val fs = fsFor(spark, root)
-    fs.mkdirs(new Path(root, "manifests"))
-    val fc = FileContext.getFileContext(new Path(root).toUri,
-      spark.sparkContext.hadoopConfiguration)
-    // COMMIT-RACE FENCE: the state in hand was computed against the
-    // manifest CURRENT named when the op started (`expectCurrent`).
-    // If the pointer moved since, a concurrent committer published a
-    // state this op never read — publishing over it would silently
-    // drop that commit (for an apply, the lost batch's retry would
-    // then no-op on the `>=` replay guard, losing it forever; for
-    // maintenance, the flip would roll the table back). Refuse LOUDLY
-    // instead. Crash-retry recommit is unaffected: the retry re-reads
-    // CURRENT at entry, so its expectation matches unless someone
-    // else really moved it.
-    //
-    // The fence is CAS-GRADE where the filesystem gives atomic
-    // create-exclusive (HDFS semantics, incl. the local FS): after
-    // the pointer check, the committer CLAIMS the predecessor's
-    // successor slot — a dot-prefixed `.after-<predecessor>` marker
-    // created with overwrite=false, content = the successor name.
-    // Exactly one creator wins; a loser (or anyone finding the slot
-    // already claimed by a DIFFERENT name) refuses loudly, so the
-    // old check-then-flip window between the check and the rename is
-    // closed: the claim, not the pointer rename, decides the race.
-    // BOTH commit kinds route through it — applies/syncs AND
-    // maintenance generations (rename/rebucket/zorder/compaction/
-    // expiry), so apply-vs-apply, apply-vs-maintenance, and
-    // maintenance-vs-maintenance races all resolve to one winner per
-    // successor slot. Crash-retry recommit of the SAME name reads its
-    // own claim back and proceeds.
-    //
-    // Residual caveats, documented: (1) a claim created but crashed
-    // before its one content write reads empty — a corpse. Takeover
-    // is delete + ONE fresh create-exclusive; a collision on the
-    // retry defers to the new claimant's content, and an
-    // empty-on-retry slot REFUSES (never proceed undecided). Two
-    // takers whose delete/create interleave adversarially can still
-    // both win — a few-ms pathological schedule, strictly narrower
-    // than the pre-claim fence. (2) a committer that died between
-    // claim and pointer flip leaves the slot claimed; its own retry
-    // (same name) heals it, other committers refuse until then.
-    // (3) object stores without atomic create-exclusive degrade to
-    // the old loud-but-unproven check-then-flip convention.
-    def fence(): Unit = expectCurrent.foreach { pred =>
-      Option(raceWindowHook.getAndSet(null)).foreach(_.apply())
-      val now = currentManifestName(spark, root)
-      if (now != pred)
-        throw new java.util.ConcurrentModificationException(
-          s"lost commit race on $root: CURRENT moved from " +
-            s"${pred.getOrElse("<none>")} to ${now.getOrElse("<none>")} " +
-            s"while $name was prepared — it read a stale base and " +
-            "must not be published; retry against the new head")
-      val claim = new Path(root,
-        s"manifests/.after-${pred.getOrElse("genesis")}")
-      def tryClaim(): Option[String] =
-        try {
-          val out = fs.create(claim, false)
-          out.write(name.getBytes("UTF-8"))
-          out.close()
-          Some(name)
-        } catch { case _: java.io.IOException => None }
-      val winner = tryClaim().getOrElse {
-        scala.util.Try(readSmallFile(fs, claim).trim)
-          .toOption.filter(_.nonEmpty).getOrElse {
-            // corpse (creator died pre-write): delete + one fresh
-            // create-exclusive; if that also collides, the new
-            // claimant decides — and an empty re-read refuses
-            fs.delete(claim, false)
-            tryClaim().getOrElse(
-              scala.util.Try(readSmallFile(fs, claim).trim)
-                .toOption.filter(_.nonEmpty).getOrElse(
-                  throw new java.util.ConcurrentModificationException(
-                    s"undecided successor slot for " +
-                      s"${pred.getOrElse("<genesis>")} on $root — " +
-                      "refusing to publish over it; retry")))
-          }
-      }
+      name: String, m: Manifest, pred: Option[String]): Unit = {
+    require(pred.forall(p => Ordering[(Long, Int)].gt(
+      parseManifestName(name), parseManifestName(p))),
+      s"commit $name on $root must sort above its predecessor " +
+        pred.mkString)
+    def lost(why: String) = new java.util.ConcurrentModificationException(
+      s"lost commit race on $root: $why while $name was prepared — it " +
+        "read a stale base and must not be published; retry against " +
+        "the new head")
+    val predName = pred.getOrElse("genesis")
+    val head = currentManifestName(spark, root)
+    if (head != pred)
+      throw lost(s"the head moved from $predName to " +
+        head.getOrElse("<none>"))
+    Option(raceWindowHook.getAndSet(null)).foreach(_.apply())
+    val mdir = new Path(root, "manifests")
+    val claim = new Path(mdir, s".after-$predName")
+    if (!renameInto(spark, claim, name)) {
+      val winner = readSmallFile(fsFor(spark, root), claim).trim
       if (winner != name)
-        throw new java.util.ConcurrentModificationException(
-          s"lost commit race on $root: predecessor " +
-            s"${pred.getOrElse("<genesis>")} was already succeeded " +
-            s"by $winner while $name was prepared — refusing to " +
-            s"publish $name over it; retry against the new head")
+        throw lost(s"$predName was already succeeded by $winner")
     }
-    // maintenance (overwrite=false) fences BEFORE its manifest rename
-    // so a lost race leaves NO half-landed generation manifest for
-    // listing-based readers (renameColumn is metadata-only — a
-    // post-rename loss would surface the "failed" rename as the
-    // batch's top generation); applies fence AFTER the rename because
-    // crash-retry must recommit the same name with OVERWRITE anyway,
-    // and their manifest name (a new batch id) collides with nothing.
-    if (!overwrite) fence()
-    val mTmp = new Path(root, s"manifests/.$name.tmp")
-    writeSmallFile(fs, mTmp, serializeManifest(m))
-    // applies keep OVERWRITE (a crash between manifest rename and
-    // pointer flip re-runs the SAME batch under the replay guard and
-    // must be able to recommit); maintenance ops pass overwrite=false so
-    // two racing maintenance processes fail loudly at the rename instead
-    // of silently replacing each other's committed generation
-    if (overwrite)
-      fc.rename(mTmp, new Path(root, s"manifests/$name"),
-        Options.Rename.OVERWRITE)
-    else
-      try fc.rename(mTmp, new Path(root, s"manifests/$name"))
-      catch {
-        case e: org.apache.hadoop.fs.FileAlreadyExistsException =>
-          fs.delete(mTmp, false)
-          throw new IllegalStateException(
-            s"concurrent maintenance detected: manifest $name already " +
-              "exists — one maintenance process per table root is the " +
-              "operating contract", e)
-      }
-    if (overwrite) fence()
-    val tmp = new Path(root, s".CURRENT.$batchId.tmp")
-    writeSmallFile(fs, tmp, name)
-    fc.rename(tmp, new Path(root, "CURRENT"), Options.Rename.OVERWRITE)
+    if (!renameInto(spark, new Path(mdir, name), serializeManifest(m)))
+      throw lost(s"another writer committed $name")
   }
 
-  /** Maintenance-generation commit: the same claim-fenced commit as an
-    * apply (`expectCurrent` = the generation this op read, fence run
-    * BEFORE the manifest rename), with a lost race translated to
-    * `false` — the documented maintenance guard-abort contract, now
-    * decided by the CAS-grade claim instead of a check-then-rename
-    * window.
+  /** Maintenance-generation commit: [[commitManifest]] with a lost race
+    * translated to `false`, the documented maintenance guard-abort
+    * contract.
     */
   private def commitMaintenance(spark: SparkSession, root: String,
-      name: String, m: Manifest, batchId: Long,
-      pred: String): Boolean =
+      name: String, m: Manifest, pred: String): Boolean =
     try {
-      commitManifest(spark, root, name, m, batchId,
-        overwrite = false, expectCurrent = Some(Some(pred)))
+      commitManifest(spark, root, name, m, Some(pred))
       true
     } catch {
       case _: java.util.ConcurrentModificationException => false
@@ -2640,7 +2496,7 @@ object CdcApply {
     * contracts are directly testable. Returns false when the batch was
     * skipped: already covered by the replay guard, or empty (an idle
     * trigger must not copy-on-write anything — skipping the write AND
-    * the pointer flip is safe, since the `>=` guard and latest-wins
+    * the commit is safe, since the `>=` guard and latest-wins
     * semantics never depend on contiguous batch ids).
     *
     * `numBuckets` and `tombstoneRetention` take effect at FIRST apply
@@ -2695,12 +2551,12 @@ object CdcApply {
     require(unserializable.forall(c => !c.exists(" ,\t\n".contains(_))),
       "key/version/deleted column names must not contain spaces, " +
         "commas, or tabs (they are serialized into the manifest header)")
-    // ONE pointer read serves the replay guard AND the commit fence:
-    // the manifest this merge reads is exactly the one CURRENT named
+    // ONE head resolution serves the replay guard AND the commit
+    // fence: the manifest this merge reads is exactly the head named
     // here, so commitManifest can detect a concurrent applier by
-    // checking the pointer still names it (a separate re-read could
-    // tear across a concurrent commit).
-    // Replay guard: if the pointer already covers this batch, the
+    // checking the head is still it (a separate re-read could tear
+    // across a concurrent commit).
+    // Replay guard: if the head already covers this batch, the
     // apply committed before the crash — re-merging would read and
     // overwrite the batch's own output
     val predecessor = currentManifestName(spark, root)
@@ -2795,8 +2651,8 @@ object CdcApply {
     // touched-bucket set: at most numBuckets ints — manifest-sized
     // metadata, the same class of driver hop as an index probe list.
     // Doubles as the empty-batch short-circuit: an idle trigger must not
-    // copy-on-write anything, and skipping the write AND the pointer
-    // flip is safe (the >= replay guard never needs contiguous ids)
+    // copy-on-write anything, and skipping the write AND the commit
+    // is safe (the >= replay guard never needs contiguous ids)
     val touched = batch.select(BucketCol).distinct()
       .collect().map(_.getInt(0)).toSeq.sorted
     if (touched.isEmpty) return false
@@ -2946,7 +2802,7 @@ object CdcApply {
       commitManifest(spark, root, s"v$batchId.0",
         Manifest(conf, (prior -- touched) ++ written, Some(evolved),
           Some(commitTs), existing.map(_.renames).getOrElse(Seq.empty)),
-        batchId, expectCurrent = Some(predecessor))
+        pred = predecessor)
       true
     } finally logged.foreach(_.unpersist())
   }
@@ -3038,7 +2894,7 @@ object CdcApply {
       Manifest(conf, (prior -- touched) ++ deltaEntries ++ compactEntries,
         Some(evolved), Some(commitTs),
         existing.map(_.renames).getOrElse(Seq.empty)),
-      batchId, expectCurrent = Some(predecessor))
+      pred = predecessor)
     true
   }
 
@@ -3130,7 +2986,7 @@ object CdcApply {
     * [[reseedMirror]]. Returns the bootstrap frame — the table's full
     * live state plus unexpired tombstones, each row stamped with its
     * applying batch under [[ChangeBatchCol]], the stream's exact shape
-    * — together with the head batch id it covers (ONE pointer read, so
+    * — together with the head batch id it covers (ONE head read, so
     * frame and watermark cannot tear across a concurrent apply).
     * Protocol: stop the consumer, process the frame as one batch,
     * restart [[readChangesStream]] with a FRESH checkpoint dir. Events

@@ -19,7 +19,7 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, T
   * [[CdcTableResolution]] rule (installed by
   * `graft.governance.GraftExtensions`) expands any reference to that
   * name into the table's CURRENT snapshot plan at ANALYSIS time — every
-  * query re-reads the manifest pointer, so `SELECT * FROM orders_cdc`
+  * query re-resolves the head manifest, so `SELECT * FROM orders_cdc`
   * is always the live snapshot, never a stale view captured at
   * registration. SQL time travel rides the standard syntax:
   * `VERSION AS OF <batch>` resolves through
@@ -383,8 +383,8 @@ object CdcSql {
       // RUNS the maintenance when the statement analyzes (exactly
       // once per spark.sql call) and returns a one-row status frame.
       // All four route through the fenced Scala ops — a concurrent
-      // apply aborts at the commit guard, concurrent maintenance
-      // fails loudly at the manifest rename — and a governed root
+      // apply or maintenance commit aborts them at the commit guard —
+      // and a governed root
       // refuses any principal but the DataAdmin before touching
       // anything (requireMaintainer). ----
       (FunctionIdentifier("cdc_compact"),
@@ -843,7 +843,7 @@ case class CdcTableResolution(spark: SparkSession)
   }
 
   /** The snapshot (or time-travel) frame, freshly resolved against the
-    * manifest pointer, aliased so `name.col` references resolve. The
+    * head manifest, aliased so `name.col` references resolve. The
     * nested DataFrame construction runs this session's full analysis —
     * including governance injection for governed roots — so the embedded
     * subtree arrives resolved and governance-tagged; the outer fixpoint

@@ -147,7 +147,7 @@ object Rollup {
     require(aggs.map(_.out).distinct.size == aggs.size,
       "duplicate aggregate output names")
     checkOrWriteSpec(spark, rollupRoot, groupCols, aggs, write = true)
-    // ONE pointer read for (manifest, head version): a separate
+    // ONE head read for (manifest, head version): a separate
     // currentVersion re-read could see a batch newer than the manifest
     // in hand (concurrent apply), and pruning against the stale tags
     // while stamping the newer watermark would skip that batch's
@@ -155,8 +155,8 @@ object Rollup {
     CdcApply.currentManifestAndVersion(spark, root) match {
       case None => false
       case Some((src, cur)) =>
-        // the rollup's own pointer: watermark + the fence expectation
-        // of the carried-forward commit below, from one read
+        // the rollup's own head: watermark + the predecessor of the
+        // carried-forward commit below, from one read
         val rollCur = CdcApply.currentNameAndVersion(spark, rollupRoot)
         val wm = rollCur.map(_._2).getOrElse(-1L)
         if (wm >= cur) false
@@ -236,24 +236,17 @@ object Rollup {
           // empty): advance the watermark with a carried-forward
           // commit, as syncMirror does, so polls stay O(metadata)
           if (!applied) {
-            // fenced on the watermark's own pointer read: a concurrent
-            // sync's data commit must not be overwritten by this stale
+            // fenced on the watermark's own head read: a concurrent
+            // sync's data commit must not be superseded by this stale
             // carried-forward map (see CdcApply.commitManifest)
-            rollCur.map(nv =>
-                CdcApply.manifestByName(spark, rollupRoot, nv._1)) match {
-              case Some(mm) =>
-                CdcApply.commitManifest(spark, rollupRoot, s"v$cur.0",
-                  mm.copy(ts = Some(ts)), cur,
-                  expectCurrent = Some(rollCur.map(_._1)))
-              case None =>
-                CdcApply.commitManifest(spark, rollupRoot, s"v$cur.0",
-                  CdcApply.Manifest(
-                    CdcApply.TableConf(numBuckets, keys, VersionCol,
-                      Some(DeletedCol),
-                      CdcApply.DefaultTombstoneRetention),
-                    Map.empty, None, Some(ts)), cur,
-                  expectCurrent = Some(rollCur.map(_._1)))
-            }
+            val mm = rollCur.map(nv =>
+                CdcApply.manifestByName(spark, rollupRoot, nv._1))
+              .getOrElse(CdcApply.Manifest(
+                CdcApply.TableConf(numBuckets, keys, VersionCol,
+                  Some(DeletedCol), CdcApply.DefaultTombstoneRetention),
+                Map.empty, None, None))
+            CdcApply.commitManifest(spark, rollupRoot, s"v$cur.0",
+              mm.copy(ts = Some(ts)), pred = rollCur.map(_._1))
           }
           true
         }

@@ -109,7 +109,7 @@ object SecondaryIndex {
       commitTs: Option[Long] = None): Boolean = {
     require(indexCols.nonEmpty, "at least one indexed column is required")
     checkOrWriteSpec(spark, indexRoot, indexCols, write = true)
-    // ONE pointer read for (manifest, head): pruning against a stale
+    // ONE head read for (manifest, head): pruning against a stale
     // manifest while stamping a newer watermark would skip rewrites
     // forever (see syncRollup)
     CdcApply.currentManifestAndVersion(spark, root) match {
@@ -121,8 +121,8 @@ object SecondaryIndex {
           s"indexing source key columns is meaningless (the primary " +
             s"key already prunes): $overlap")
         val idxKeys = indexCols ++ srcKeys
-        // the index's own pointer: watermark + the fence expectation
-        // of the carried-forward commit below, from one read
+        // the index's own head: watermark + the predecessor of the
+        // carried-forward commit below, from one read
         val idxCur = CdcApply.currentNameAndVersion(spark, indexRoot)
         val wm = idxCur.map(_._2).getOrElse(-1L)
         if (wm >= cur) false
@@ -184,25 +184,18 @@ object SecondaryIndex {
           // the watermark with a carried-forward commit so polls stay
           // O(metadata), as syncMirror/syncRollup do
           if (!applied) {
-            // fenced on the watermark's own pointer read: a concurrent
-            // sync's data commit must not be overwritten by this stale
+            // fenced on the watermark's own head read: a concurrent
+            // sync's data commit must not be superseded by this stale
             // carried-forward map (see CdcApply.commitManifest)
-            idxCur.map(nv =>
-                CdcApply.manifestByName(spark, indexRoot, nv._1)) match {
-              case Some(mm) =>
-                CdcApply.commitManifest(spark, indexRoot, s"v$cur.0",
-                  mm.copy(ts = Some(ts)), cur,
-                  expectCurrent = Some(idxCur.map(_._1)))
-              case None =>
-                CdcApply.commitManifest(spark, indexRoot, s"v$cur.0",
-                  CdcApply.Manifest(
-                    CdcApply.TableConf(numBuckets, idxKeys, VersionCol,
-                      Some(DeletedCol),
-                      CdcApply.DefaultTombstoneRetention,
-                      bucketKeys = Some(indexCols)),
-                    Map.empty, None, Some(ts)), cur,
-                  expectCurrent = Some(idxCur.map(_._1)))
-            }
+            val mm = idxCur.map(nv =>
+                CdcApply.manifestByName(spark, indexRoot, nv._1))
+              .getOrElse(CdcApply.Manifest(
+                CdcApply.TableConf(numBuckets, idxKeys, VersionCol,
+                  Some(DeletedCol), CdcApply.DefaultTombstoneRetention,
+                  bucketKeys = Some(indexCols)),
+                Map.empty, None, None))
+            CdcApply.commitManifest(spark, indexRoot, s"v$cur.0",
+              mm.copy(ts = Some(ts)), pred = idxCur.map(_._1))
           }
           true
         }

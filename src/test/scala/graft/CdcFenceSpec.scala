@@ -46,8 +46,8 @@ class CdcFenceSpec extends AnyFunSuite with SparkTestBase
     val b3 = Seq((2L, 2L, 22.0, false)).toDF(
       "k", "version", "amount", "deleted")
     // batch 3 commits INSIDE batch 2's fence window (after batch 2's
-    // merge read the batch-0 base, before its pointer check) — the
-    // one-shot hook fires exactly there
+    // merge read the batch-0 base and its head check passed, before
+    // its claim) — the one-shot hook fires exactly there
     CdcApply.raceWindowHook.set(() =>
       assert(CdcApply.applyBatch(b3, 3L, root, Seq("k"), "version",
         Some("deleted"))))
@@ -122,18 +122,18 @@ class CdcFenceSpec extends AnyFunSuite with SparkTestBase
     assert(!CdcApply.syncMirror(spark, src, mirror))
   }
 
-  test("the CAS claim decides a race the pointer check cannot see: " +
-    "a claimed-but-unflipped successor slot refuses a different " +
-    "commit, readmits its own crash-retry, and a pre-write corpse " +
-    "is taken over") {
+  test("the claim decides a race the head check cannot see: a " +
+    "claimed-but-unlanded successor slot keeps the table at the " +
+    "previous version, refuses a different commit, and readmits its " +
+    "own crash-retry") {
     val root = newRoot()
     assert(CdcApply.applyBatch(b0, 0L, root, Seq("k"), "version",
       Some("deleted")))
     val b2 = Seq((1L, 2L, 11.0, false)).toDF(
       "k", "version", "amount", "deleted")
     // a concurrent committer claimed v0.0's successor slot (as v3.0)
-    // but has NOT flipped the pointer yet — the old check-then-flip
-    // fence would sail through this window; the claim refuses it
+    // but has NOT landed its manifest yet — the head check passes in
+    // this window; the claim refuses
     val claim = new java.io.File(root, "manifests/.after-v0.0")
     java.nio.file.Files.writeString(claim.toPath, "v3.0")
     val e = intercept[java.util.ConcurrentModificationException] {
@@ -143,24 +143,16 @@ class CdcFenceSpec extends AnyFunSuite with SparkTestBase
     assert(e.getMessage.contains("already succeeded by v3.0"),
       e.getMessage)
     assert(CdcApply.currentVersion(spark, root).contains(0L),
-      "the loser must not have flipped the pointer")
+      "a claim alone must not advance the table")
+    val state = CdcApply.readSnapshot(spark, root).get.collect()
+      .map(r => (r.getAs[Long]("k"), r.getAs[Double]("amount"))).toSet
+    assert(state == Set(1L -> 10.0, 2L -> 20.0), state.toString)
     // crash-retry of the claim's OWN commit reads its claim back and
-    // completes (claim names v2.0 = the retry's manifest name)
+    // lands (claim names v2.0 = the retry's manifest name)
     java.nio.file.Files.writeString(claim.toPath, "v2.0")
-    new java.io.File(root, "manifests/..after-v0.0.crc").delete()
     assert(CdcApply.applyBatch(b2, 2L, root, Seq("k"), "version",
       Some("deleted")))
     assert(CdcApply.currentVersion(spark, root).contains(2L))
-    // a creator that died before its one content write left an empty
-    // corpse: the next committer takes the slot over
-    val root2 = newRoot()
-    assert(CdcApply.applyBatch(b0, 0L, root2, Seq("k"), "version",
-      Some("deleted")))
-    java.nio.file.Files.writeString(
-      new java.io.File(root2, "manifests/.after-v0.0").toPath, "")
-    assert(CdcApply.applyBatch(b2, 2L, root2, Seq("k"), "version",
-      Some("deleted")))
-    assert(CdcApply.currentVersion(spark, root2).contains(2L))
   }
 
   test("vacuum sweeps the successor-slot claims of the manifests it " +
@@ -200,8 +192,8 @@ class CdcFenceSpec extends AnyFunSuite with SparkTestBase
       Some("deleted"), numBuckets = 2))
     val b3 = Seq((2L, 2L, 22.0, false)).toDF(
       "k", "version", "amount", "deleted")
-    // batch 3 commits INSIDE the rebucket's fence window (fence runs
-    // BEFORE the maintenance manifest rename)
+    // batch 3 commits INSIDE the rebucket's fence window (before its
+    // claim and manifest landing)
     CdcApply.raceWindowHook.set(() =>
       assert(CdcApply.applyBatch(b3, 3L, root, Seq("k"), "version",
         Some("deleted"), numBuckets = 2)))
@@ -246,7 +238,7 @@ class CdcFenceSpec extends AnyFunSuite with SparkTestBase
       "k", "version", "amount", "deleted")
     assert(CdcApply.applyBatch(b1, 1L, root, Seq("k"), "version",
       Some("deleted")))
-    // replayed batch: covered by the pointer, skipped before any fence
+    // replayed batch: covered by the head, skipped before any fence
     assert(!CdcApply.applyBatch(b1, 1L, root, Seq("k"), "version",
       Some("deleted")))
     val state = CdcApply.readSnapshot(spark, root).get.collect()
@@ -254,50 +246,118 @@ class CdcFenceSpec extends AnyFunSuite with SparkTestBase
     assert(state == Set(1L -> 11.0, 2L -> 20.0))
   }
 
-  test("a CURRENT read racing the pointer flip's crc-sidecar rename " +
-    "survives (stale local-FS checksum, fresh data file)") {
+  test("a tag read racing a tag move's crc-sidecar rename survives " +
+    "(stale local-FS checksum, fresh data file)") {
     val root = newRoot()
     assert(CdcApply.applyBatch(b0, 0L, root, Seq("k"), "version",
       Some("deleted")))
+    val b1 = Seq((1L, 2L, 11.0, false)).toDF(
+      "k", "version", "amount", "deleted")
+    assert(CdcApply.applyBatch(b1, 1L, root, Seq("k"), "version",
+      Some("deleted")))
+    CdcApply.tag(spark, root, "t", 0L)
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ptr = new org.apache.hadoop.fs.Path(root, "CURRENT")
-    val before = CdcApply.currentManifestName(spark, root).get
-    // reproduce the mid-flip window deterministically: the new pointer
-    // content lands in the DATA file (raw write) while the .crc
-    // sidecar still verifies the old content — exactly what a reader
-    // sees between ChecksumFs's two renames
+    // reproduce the mid-move window of `tag(replace = true)`
+    // deterministically: the new tag content lands in the DATA file
+    // (raw write) while the .crc sidecar still verifies the old
+    // content — exactly what a reader sees between ChecksumFs's two
+    // renames
     val raw = fs.asInstanceOf[org.apache.hadoop.fs.ChecksumFileSystem]
       .getRawFileSystem
-    val out = raw.create(ptr, true)
-    try out.write("v99.0".getBytes("UTF-8")) finally out.close()
-    // the read must surface the new pointer, not a ChecksumException
-    assert(CdcApply.currentManifestName(spark, root).contains("v99.0"),
-      s"stale-crc read did not recover (was $before)")
+    val out = raw.create(new org.apache.hadoop.fs.Path(root, "tags/t"), true)
+    try out.write("1 1".getBytes("UTF-8")) finally out.close()
+    // the read must surface the moved tag, not a ChecksumException
+    assert(CdcApply.resolveTag(spark, root, "t").contains(1L))
   }
 
-  test("a pointer read racing pointer flips never fails on a " +
-    "CURRENT that vanished mid-flip") {
+  test("a lost apply leaves nothing that time travel, history or a " +
+    "manifest listing can see") {
+    val root = newRoot()
+    def apply(df: org.apache.spark.sql.DataFrame, b: Long, ts: Long) =
+      CdcApply.applyBatch(df, b, root, Seq("k"), "version",
+        Some("deleted"), commitTs = Some(ts))
+    assert(apply(b0, 0L, 1000L))
+    val b2 = Seq((1L, 2L, 11.0, false)).toDF(
+      "k", "version", "amount", "deleted")
+    val b3 = Seq((2L, 2L, 22.0, false)).toDF(
+      "k", "version", "amount", "deleted")
+    CdcApply.raceWindowHook.set(() => assert(apply(b3, 3L, 3000L)))
+    intercept[java.util.ConcurrentModificationException] {
+      apply(b2, 2L, 2000L)
+    }
+    assert(CdcApply.readSnapshotAt(spark, root, 2L).isEmpty,
+      "the lost batch must not be time-travelable")
+    assert(CdcApply.resolveAsOf(spark, root, 2500L).contains(0L))
+    val batches = CdcApply.history(spark, root)
+      .select("batch_id").as[Long].collect().toSet
+    assert(batches == Set(0L, 3L), batches.toString)
+    val names = new java.io.File(root, "manifests").listFiles()
+      .map(_.getName).filter(_.startsWith("v")).toSet
+    assert(names == Set("v0.0", "v3.0"), names.toString)
+  }
+
+  test("two appliers of one batch id: exactly one lands, the other " +
+    "throws, and the table reads as the winner's rows") {
     val root = newRoot()
     assert(CdcApply.applyBatch(b0, 0L, root, Seq("k"), "version",
       Some("deleted")))
-    val name = CdcApply.currentManifestName(spark, root).get
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      new java.io.File(root).toURI, spark.sparkContext.hadoopConfiguration)
-    // re-point CURRENT at the same manifest, the way a commit flips it
-    val flips = new java.util.concurrent.atomic.AtomicInteger
-    val flipper = new Thread(() => (0 until 300).foreach { i =>
-      val tmp = new java.io.File(root, s".CURRENT.$i.tmp")
-      java.nio.file.Files.writeString(tmp.toPath, name)
-      fc.rename(new org.apache.hadoop.fs.Path(tmp.getPath),
-        new org.apache.hadoop.fs.Path(root, "CURRENT"),
-        org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-      flips.incrementAndGet()
-    })
-    flipper.start()
-    try while (flipper.isAlive)
-      assert(CdcApply.currentManifestName(spark, root).forall(_ == name))
-    finally flipper.join()
-    assert(flips.get == 300)
+    val mine = Seq((1L, 2L, 11.0, false)).toDF(
+      "k", "version", "amount", "deleted")
+    val theirs = Seq((2L, 2L, 22.0, false)).toDF(
+      "k", "version", "amount", "deleted")
+    // the other applier of batch 2 commits inside this one's window,
+    // after its head check: both claim v0.0's slot for the same name,
+    // so only the no-overwrite landing tells them apart
+    CdcApply.raceWindowHook.set(() =>
+      assert(CdcApply.applyBatch(theirs, 2L, root, Seq("k"), "version",
+        Some("deleted"))))
+    val e = intercept[java.util.ConcurrentModificationException] {
+      CdcApply.applyBatch(mine, 2L, root, Seq("k"), "version",
+        Some("deleted"))
+    }
+    assert(e.getMessage.contains("another writer committed v2.0"),
+      e.getMessage)
+    val names = new java.io.File(root, "manifests").listFiles()
+      .map(_.getName).filter(_.startsWith("v")).toSet
+    assert(names == Set("v0.0", "v2.0"), names.toString)
+    val state = CdcApply.readSnapshot(spark, root).get.collect()
+      .map(r => (r.getAs[Long]("k"), r.getAs[Double]("amount"))).toSet
+    assert(state == Set(1L -> 10.0, 2L -> 22.0), state.toString)
+  }
+
+  test("a head read racing metadata-only commits always resolves and " +
+    "never moves backward") {
+    val root = newRoot()
+    assert(CdcApply.applyBatch(b0, 0L, root, Seq("k"), "version",
+      Some("deleted")))
+    // each rename is one generation commit and runs no Spark job
+    val commits = 100
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]
+    val writer = new Thread(() =>
+      try (0 until commits).foreach { i =>
+        if (i % 2 == 0) CdcApply.renameColumn(spark, root, "amount", "amt")
+        else CdcApply.renameColumn(spark, root, "amt", "amount")
+      } catch { case t: Throwable => failure.set(t) })
+    def gen(name: String): (Long, Int) = {
+      val Array(b, g) = name.stripPrefix("v").split('.')
+      (b.toLong, g.toInt)
+    }
+    var last = (0L, 0)
+    var reads = 0
+    writer.start()
+    try while (writer.isAlive) {
+      val head = CdcApply.currentManifestName(spark, root)
+      assert(head.isDefined, s"a live table read as empty after $reads reads")
+      val now = gen(head.get)
+      assert(Ordering[(Long, Int)].gteq(now, last),
+        s"the head moved back from $last to $now")
+      last = now
+      reads += 1
+    } finally writer.join()
+    Option(failure.get).foreach(t => throw t)
+    assert(reads > 0)
+    assert(CdcApply.currentManifestName(spark, root)
+      .contains(s"v0.$commits"))
   }
 }

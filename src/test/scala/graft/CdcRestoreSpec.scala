@@ -8,7 +8,7 @@ import graft.streaming.CdcSql
 /** RESTORE ([[graft.streaming.CdcApply.restore]]): roll a table's
   * logical state back to a retained batch, committed as a NEW batch so
   * the replay-guard watermark stays monotone and the change feed
-  * reports exactly the logical diff — never a silent pointer rewind.
+  * reports exactly the logical diff — never a silent rewind of the head.
   */
 class CdcRestoreSpec extends AnyFunSuite with SparkTestBase {
 

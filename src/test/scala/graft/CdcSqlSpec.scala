@@ -548,10 +548,9 @@ class CdcSqlSpec extends AnyFunSuite with SparkTestBase {
         spark.sql("SELECT * FROM tag_t VERSION AS OF 'stable'")
       }
       assert(e.getMessage.contains("cdc_tag"))
-      // traversal-shaped names never build a Path outside tags/:
-      // `../current` would otherwise probe the table's POINTER file
-      // and die parsing a manifest name as a batch id — the contract
-      // is "no such tag", same as any name tag() could not create
+      // traversal-shaped names never build a Path outside tags/: the
+      // contract is "no such tag", same as any name tag() could not
+      // create
       assert(CdcApply.resolveTag(spark, root, "../current").isEmpty)
       assert(CdcApply.resolveTag(spark, root, "a/b").isEmpty)
       val et = intercept[UnsupportedOperationException] {

@@ -335,7 +335,7 @@ class EventStreamSpec extends AnyFunSuite with SparkTestBase {
         .get.collect().map(r => r.getAs[Long]("k") -> r.getAs[String]("v"))
         .toMap
       assert(asOf0 == s1, s"time travel to v0 returned $asOf0")
-      // retention sweep keeps the newest N and never breaks CURRENT
+      // retention sweep keeps the newest N and never breaks the head
       val removed = graft.streaming.CdcApply.vacuum(spark, root, keep = 1)
       assert(removed.nonEmpty, "vacuum removed nothing")
       val after = graft.streaming.CdcApply.readSnapshot(spark, root).get
@@ -418,8 +418,9 @@ class EventStreamSpec extends AnyFunSuite with SparkTestBase {
       .toDF("k", "version", "v", "deleted")
     assert(graft.streaming.CdcApply.applyBatch(b0, 0L, root,
       Seq("k"), "version", Some("deleted")))
-    // a foreachBatch replay after the pointer flip: same id, and even a
-    // DIFFERENT payload must not be re-merged (the batch committed)
+    // a foreachBatch replay after the manifest landed: same id, and
+    // even a DIFFERENT payload must not be re-merged (the batch
+    // committed)
     val replay = Seq((3L, 2L, "c", false))
       .toDF("k", "version", "v", "deleted")
     assert(!graft.streaming.CdcApply.applyBatch(replay, 0L, root,
@@ -1459,8 +1460,9 @@ class EventStreamSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
-  test("maintenance crash recovery: an orphaned never-current manifest " +
-    "is reclaimed, and maintenance data dirs are per-op") {
+  test("maintenance crash recovery: a claimed but unlanded generation " +
+    "leaves the table unchanged and its retry lands, and maintenance " +
+    "data dirs are per-op") {
     import spark.implicits._
     val C = graft.streaming.CdcApply
     val root = java.nio.file.Files
@@ -1472,16 +1474,18 @@ class EventStreamSpec extends AnyFunSuite with SparkTestBase {
     assert(apply(Seq((3L, 2L, "v3b", false)), 1L))
     val before = C.readSnapshot(spark, root).get
       .select("k", "v").as[(Long, String)].collect().toSet
-    // plant the crash leftover: a manifest at the next generation that
-    // never became CURRENT (copy of the current one — content is
-    // irrelevant, existence is what blocks the no-overwrite commit)
-    val cur = C.currentManifestName(spark, root).get
+    // plant the crash leftover: a rebucket that died between claiming
+    // the head's successor slot (as generation v1.1) and landing its
+    // manifest. A claim is not a commit: the head stays v1.0
     val mdir = new java.io.File(root, "manifests")
-    java.nio.file.Files.copy(
-      new java.io.File(mdir, cur).toPath,
-      new java.io.File(mdir, "v1.1").toPath)
-    // the retry claims the target: orphan deleted, commit succeeds
+    java.nio.file.Files.writeString(
+      new java.io.File(mdir, ".after-v1.0").toPath, "v1.1")
+    assert(C.currentManifestName(spark, root).contains("v1.0"))
+    assert(C.numBuckets(spark, root).contains(4))
+    // the retry targets the same generation, reads its own claim back
+    // and lands
     assert(C.rebucket(spark, root, 8))
+    assert(C.currentManifestName(spark, root).contains("v1.1"))
     assert(C.readSnapshot(spark, root).get
       .select("k", "v").as[(Long, String)].collect().toSet == before)
     assert(C.numBuckets(spark, root).contains(8))

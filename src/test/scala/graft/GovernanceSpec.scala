@@ -671,7 +671,7 @@ class GovernanceSpec extends AnyFunSuite with SparkTestBase {
           Seq("k"), "version", Some("deleted"))
       }
     }
-    // nothing committed: no CURRENT pointer exists
+    // nothing committed: no manifest exists
     assert(graft.streaming.CdcApply
       .currentVersion(spark, root).isEmpty)
     // DataAdmin holds the write grant and the apply goes through whole

@@ -251,6 +251,28 @@ class SearchSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("repeatedSpans: the tokenizer sits above the spread exchange, " +
+      "never on the scan below it") {
+    import org.apache.spark.sql.catalyst.expressions.XxHash64
+    import org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
+    import graft.functions.{Shingles, WsTokens}
+    val plan = graft.search.Ngrams.repeatedSpans(
+      Tables.documents(spark, sfDir), "doc_id", "text")
+      .queryExecution.optimizedPlan
+    val spreads = plan.collect {
+      case r: RepartitionByExpression
+          if r.partitionExpressions.exists(_.isInstanceOf[XxHash64]) => r
+    }
+    assert(spreads.nonEmpty, "precondition: the spread must fire")
+    spreads.foreach { r =>
+      val below = r.child.flatMap(_.expressions.flatMap(_.collect {
+        case e: WsTokens => e
+        case e: Shingles => e
+      }))
+      assert(below.isEmpty, s"tokenizer under the spread:\n$r")
+    }
+  }
+
   test("ngrams: pairwise group overlap is exact; disjoint pairs absent") {
     import spark.implicits._
     val docs = Seq(
