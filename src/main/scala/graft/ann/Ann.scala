@@ -3,7 +3,8 @@ package graft.ann
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.VectorFunctions._
+import graft.functions.GraftFunctions.{cosineQuant, dotQ, quantizeVec}
+import graft.functions.VectorFunctions.cosineFromQ
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -49,7 +50,7 @@ object Ann {
       .select(col(idCol), col(vecCol).as("ev"))
       .crossJoin(broadcast(queryVec.toDF("qv")))
       .select(col(idCol),
-        graft.functions.GraftFunctions.cosineQuant(col("ev"), col("qv"))
+        cosineQuant(col("ev"), col("qv"))
           .as("sim"))
       .orderBy(col("sim").desc, col(idCol))
       .limit(k)
@@ -72,7 +73,7 @@ object Ann {
     */
   def centroids(emb: DataFrame, listCol: String, vecCol: String): DataFrame =
     emb
-      .select(col(listCol), posexplode(quantize(col(vecCol)))
+      .select(col(listCol), posexplode(quantizeVec(col(vecCol)))
         .as(Seq("dim", "qx")))
       .groupBy(col(listCol), col("dim"))
       .agg((sum(col("qx")).cast("double") /
@@ -124,7 +125,7 @@ object Ann {
       .select(col(vecCol).as("q_vec"))
     // index-build-time step: nlists rows — the one intentional driver hop
     val probeLists: Seq[Any] = cents.crossJoin(broadcast(q))
-      .select(col(listCol), cosine(col("centroid"), col("q_vec")).as("sim"))
+      .select(col(listCol), cosineQuant(col("centroid"), col("q_vec")).as("sim"))
       .orderBy(col("sim").desc, col(listCol))
       .limit(nprobe)
       .select(listCol).collect().toSeq.map(_.get(0))
@@ -186,7 +187,7 @@ object Ann {
     val probeLists: Seq[Any] = cents
       .crossJoin(broadcast(queryVec.toDF("q_vec")))
       .select(col(listCol),
-        cosine(col("centroid"), col("q_vec")).as("sim"))
+        cosineQuant(col("centroid"), col("q_vec")).as("sim"))
       .orderBy(col("sim").desc, col(listCol))
       .limit(nprobe)
       .select(listCol).collect().toSeq.map(_.get(0))
@@ -270,7 +271,7 @@ object Ann {
     vecs.crossJoin(broadcast(cents))
       .select(col("vid"),
         struct(
-          graft.functions.GraftFunctions.cosineQuant(
+          cosineQuant(
             col("v"), col("centroid")).as("sim"),
           (-col("list")).as("neg_list")).as("cand"))
       .groupBy(col("vid"))
@@ -373,18 +374,19 @@ object Ann {
   def pqTopK(codes: DataFrame, books: DataFrame, queryVec: DataFrame,
       idCol: String, dims: Int, m: Int, queryId: Long,
       k: Int): DataFrame = {
-    import graft.functions.VectorFunctions._
     require(m >= 1 && dims % m == 0, s"m=$m must divide dims=$dims")
     require(queryVec.columns.length == 1,
       "queryVec must have exactly one (vector) column")
     val subDims = dims / m
     val lut = books.crossJoin(broadcast(queryVec.toDF("qv")))
       .select(col("sub"), col("list"),
-        dotQ(quantize(col("centroid")),
-          quantize(slice(col("qv"), col("sub") * subDims + 1, lit(subDims))))
+        dotQ(quantizeVec(col("centroid")),
+          quantizeVec(
+            slice(col("qv"), col("sub") * subDims + 1, lit(subDims))))
           .as("dotq"),
-        normSqQ(quantize(col("centroid"))).as("n2"),
-        normSqQ(quantize(col("qv"))).as("qn2"))
+        dotQ(quantizeVec(col("centroid")), quantizeVec(col("centroid")))
+          .as("n2"),
+        dotQ(quantizeVec(col("qv")), quantizeVec(col("qv"))).as("qn2"))
     codes.filter(col(idCol) =!= queryId)
       .select(col(idCol), posexplode(col("codes")).as(Seq("sub", "list")))
       .join(broadcast(lut), Seq("sub", "list"))
@@ -473,7 +475,7 @@ object Ann {
       "queryVec must have exactly one (vector) column")
     val probeLists: Seq[Any] = cents
       .crossJoin(broadcast(queryVec.toDF("q_vec")))
-      .select(col("list"), cosine(col("centroid"), col("q_vec")).as("sim"))
+      .select(col("list"), cosineQuant(col("centroid"), col("q_vec")).as("sim"))
       .orderBy(col("sim").desc, col("list"))
       .limit(nprobe)
       .select("list").collect().toSeq.map(_.get(0))
@@ -531,17 +533,15 @@ object Ann {
     Seq("_la", "_lb", "_ka", "_kb", "_va", "_vb", "_na", "_nb")
       .foreach(c => require(!emb.columns.contains(c),
         s"input must not carry the reserved column '$c'"))
-    import graft.functions.VectorFunctions.{cosineFromQ, dotQ, normSqQ,
-      quantize}
     // quantize ONCE per vector and precompute its squared norm BEFORE
     // the join: a pair then costs one integer dot product, not a full
     // re-quantize + two norm passes per candidate (measured ~4× on the
-    // declared query) — and the arithmetic is bit-identical to
-    // CosineQuant, so the oracle contract is unchanged
+    // declared query) — and the codegen'd quantize_vec/dot_q arithmetic
+    // is bit-identical to CosineQuant, so the oracle contract is unchanged
     def side(l: String, k: String, v: String, n: String) =
       emb.select(col(listCol).as(l), col(idCol).as(k),
-        quantize(col(vecCol)).as(v))
-        .withColumn(n, normSqQ(col(v)))
+        quantizeVec(col(vecCol)).as(v))
+        .withColumn(n, dotQ(col(v), col(v)))
     // the PROBE side is scan-spread (guide §2.5; no-op at production
     // file counts): the within-cluster pair comparison — one integer
     // dot product per candidate pair — evaluates on the probe side's
@@ -553,8 +553,8 @@ object Ann {
     val a = graft.sources.Tables.spread(
       emb.select(col(idCol), col(listCol), col(vecCol)))
       .select(col(listCol).as("_la"), col(idCol).as("_ka"),
-        quantize(col(vecCol)).as("_va"))
-      .withColumn("_na", normSqQ(col("_va")))
+        quantizeVec(col(vecCol)).as("_va"))
+      .withColumn("_na", dotQ(col("_va"), col("_va")))
     val b = side("_lb", "_kb", "_vb", "_nb")
     // equi-join on the cluster id; the id inequality and the similarity
     // threshold evaluate inside the join stage, so only (cluster, id,
@@ -598,7 +598,7 @@ object Ann {
       .join(vecs.select(col("vid").as("id_a"), col("v").as("v_a")), "id_a")
       .join(vecs.select(col("vid").as("id_b"), col("v").as("v_b")), "id_b")
       .select(col("id_a"), col("id_b"),
-        graft.functions.GraftFunctions.cosineQuant(col("v_a"), col("v_b"))
+        cosineQuant(col("v_a"), col("v_b"))
           .as("sim"))
   }
 
@@ -633,8 +633,7 @@ object Ann {
       .filter(col("neg_label") =!= col("anchor_label") &&
         col("neg_id") =!= col("anchor_id"))
       .select(col("anchor_id"), col("neg_id"),
-        graft.functions.GraftFunctions
-          .cosineQuant(col("neg_vec"), col("anchor_vec")).as("sim"))
+        cosineQuant(col("neg_vec"), col("anchor_vec")).as("sim"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("anchor_id"))
       .orderBy(col("sim").desc, col("neg_id"))

@@ -107,20 +107,20 @@ object Dedup {
     * paragraph boundaries play in C4/CCNet; swap the splitter and the
     * operators below are line-level verbatim.
     */
-  def chunkArray(text: Column, chunkLen: Int): Column =
-    TextFunctions.bindOnce(TextFunctions.tokens(text)) { toks =>
-      when(size(toks) > 0, transform(
-        sequence(lit(0),
-          ceil(size(toks) / lit(chunkLen.toDouble)).cast("int") - 1),
-        i => struct(
-          i.cast(LongType).as("chunk_idx"),
-          concat_ws(" ", slice(toks, i * chunkLen + 1, lit(chunkLen)))
-            .as("chunk_text"),
-          least(lit(chunkLen), size(toks) - i * chunkLen)
-            .cast(LongType).as("chunk_tokens"))))
-        .otherwise(array().cast(
-          "array<struct<chunk_idx:bigint,chunk_text:string,chunk_tokens:bigint>>"))
-    }
+  def chunkArray(text: Column, chunkLen: Int): Column = {
+    val toks = TextFunctions.tokens(text)
+    when(size(toks) > 0, transform(
+      sequence(lit(0),
+        ceil(size(toks) / lit(chunkLen.toDouble)).cast("int") - 1),
+      i => struct(
+        i.cast(LongType).as("chunk_idx"),
+        concat_ws(" ", slice(toks, i * chunkLen + 1, lit(chunkLen)))
+          .as("chunk_text"),
+        least(lit(chunkLen), size(toks) - i * chunkLen)
+          .cast(LongType).as("chunk_tokens"))))
+      .otherwise(array().cast(
+        "array<struct<chunk_idx:bigint,chunk_text:string,chunk_tokens:bigint>>"))
+  }
 
   /** Line segmentation — the LITERAL C4/CCNet unit: one element per
     * NON-BLANK line (trimmed), `chunk_idx` = the original 0-based line
@@ -602,28 +602,21 @@ object Dedup {
     * Input arrays are capped, so the per-row expansion is bounded by
     * cap·(cap-1)/2 — no single reducer ever sees unbounded work.
     */
-  private def pairsWithin(ids: Column): Column =
-    // bindOnce (r22): higher-order lambdas are interpreted with no
-    // common-subexpression elimination, so an inline `array_sort(ids)`
-    // re-sorts the bucket for EVERY emitted pair element — O(n³ log n)
-    // per bucket against this form's single sort (measured 2.3× on the
-    // whole q_audio_neardup query; every banded near-dup family query
-    // funnels through here)
-    TextFunctions.bindOnce(array_sort(ids)) { sorted =>
-      flatten(transform(sequence(lit(1), size(sorted) - 1),
-        i => transform(slice(sorted, i + 1, size(sorted) - i),
-          b => struct(element_at(sorted, i).as("a"), b.as("b")))))
-    }
+  private def pairsWithin(ids: Column): Column = {
+    val sorted = array_sort(ids)
+    flatten(transform(sequence(lit(1), size(sorted) - 1),
+      i => transform(slice(sorted, i + 1, size(sorted) - i),
+        b => struct(element_at(sorted, i).as("a"), b.as("b")))))
+  }
 
   /** Linear star pairs for an oversized bucket: (min, member) for every
     * other member — O(n) edges that keep the cluster connected.
     */
-  private def starPairs(ids: Column): Column =
-    // bindOnce: same single-sort rationale as [[pairsWithin]]
-    TextFunctions.bindOnce(array_sort(ids)) { sorted =>
-      transform(slice(sorted, lit(2), size(sorted) - 1),
-        b => struct(element_at(sorted, 1).as("a"), b.as("b")))
-    }
+  private def starPairs(ids: Column): Column = {
+    val sorted = array_sort(ids)
+    transform(slice(sorted, lit(2), size(sorted) - 1),
+      b => struct(element_at(sorted, 1).as("a"), b.as("b")))
+  }
 
   /** Distinct candidate pairs from (bucketKey..., member) rows: group by
     * the bucket key, then all-pairs expansion up to the cap and star

@@ -25,6 +25,14 @@ object GraftFunctions {
   def cosineQuant(a: Column, b: Column): Column =
     call_function("cosine_quant", a, b)
 
+  /** 1e-6 fixed-point components of a float vector (see
+    * [[QuantizeVec]]).
+    */
+  def quantizeVec(v: Column): Column = call_function("quantize_vec", v)
+
+  /** Exact dot product of two quantized vectors (see [[DotQ]]). */
+  def dotQ(a: Column, b: Column): Column = call_function("dot_q", a, b)
+
   /** Hyperplane LSH bucket of a float vector (see [[HyperplaneBucket]]). */
   def hplaneBucket(v: Column, bits: Int, dims: Int): Column =
     call_function("hplane_bucket", v,
@@ -139,6 +147,8 @@ object GraftFunctions {
       intArg("minhash32", "shingleSize", es(1)),
       intArg("minhash32", "k", es(2)))),
     fn("cosine_quant")(es => CosineQuant(es(0), es(1))),
+    fn("quantize_vec")(es => QuantizeVec(es.head)),
+    fn("dot_q")(es => DotQ(es(0), es(1))),
     fn("hplane_bucket")(es => HyperplaneBucket(es(0),
       intArg("hplane_bucket", "bits", es(1)),
       intArg("hplane_bucket", "dims", es(2)))),

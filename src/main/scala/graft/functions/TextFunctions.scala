@@ -64,29 +64,17 @@ object TextFunctions {
     "fr" -> Seq("le", "la", "de", "et", "les", "des", "un", "est"),
     "zh" -> Seq("de", "le", "shi", "bu", "wo", "you", "zai", "ta"))
 
-  /** Evaluate `v` ONCE per row and reference it many times inside
-    * `f`: higher-order lambdas are interpreted (no codegen common-
-    * subexpression elimination inside them), so a token split
-    * referenced N times in one expression costs N full splits —
-    * binding it as a one-element-array lambda variable makes it one
-    * (the r17 q_lang_id_learned split-once lesson, generalized; the
-    * chunk/line dedup family halved on it in r18).
-    */
-  def bindOnce(v: Column)(f: Column => Column): Column =
-    element_at(transform(array(v), f), 1)
-
   /** Predicted language code for a text column. */
-  def langId(text: Column): Column =
-    bindOnce(tokens(text)) { toks =>
-      val scored = langProfiles.map { case (lang, words) =>
-        struct(
-          size(array_intersect(toks, array(words.map(lit): _*)))
-            .as("score"),
-          lit(lang).as("lang"))
-      }
-      // struct ordering: by score, then lang — deterministic argmax.
-      array_max(array(scored: _*)).getField("lang")
+  def langId(text: Column): Column = {
+    val toks = tokens(text)
+    val scored = langProfiles.map { case (lang, words) =>
+      struct(
+        size(array_intersect(toks, array(words.map(lit): _*))).as("score"),
+        lit(lang).as("lang"))
     }
+    // struct ordering: by score, then lang — deterministic argmax.
+    array_max(array(scored: _*)).getField("lang")
+  }
 
   /** 64-bit rolling-hash document fingerprint over token hashes:
     * fp = fold(tokens, 0; rotl(acc, 5) XOR xxhash64(token)). Order-

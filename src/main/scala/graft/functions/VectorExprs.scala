@@ -3,10 +3,11 @@ package graft.functions
 import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 import java.util.concurrent.ConcurrentHashMap
 
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
 
 /** Fused, codegen'd vector math over `array<float>` embedding columns.
   *
@@ -73,6 +74,55 @@ object VecOps {
             "rescale or normalize the embeddings")
     }
     dot.toDouble / (math.sqrt(na.toDouble) * math.sqrt(nb.toDouble))
+  }
+
+  /** Quantize every component of a float or double vector with
+    * [[quant]] (a float widened to double first, as the reference's
+    * `x.cast(double)`); a null component stays null.
+    */
+  def quantizeVec(v: ArrayData, isFloat: Boolean): ArrayData = {
+    val n = v.numElements()
+    val out = new Array[Any](n)
+    var i = 0
+    while (i < n) {
+      if (!v.isNullAt(i))
+        out(i) = quant(if (isFloat) v.getFloat(i).toDouble else v.getDouble(i))
+      i += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  /** Exact dot product of two quantized vectors, or `null` where the
+    * reference `aggregate(zip_with(a, b, x * y), 0, acc + x)` is NULL: a
+    * null component or a length mismatch (zip_with pads with nulls).
+    * The order of checks is the reference's too: every product of the
+    * common prefix is formed (an overflowing one throws even past a
+    * null), and the running sum stops overflow-checking at the first
+    * null, where the reference's accumulator turns NULL.
+    */
+  def dotQ(a: ArrayData, b: ArrayData): java.lang.Long = {
+    val na = a.numElements()
+    val nb = b.numElements()
+    val n = math.min(na, nb)
+    var sum = 0L
+    var sawNull = na != nb
+    var i = 0
+    try {
+      while (i < n) {
+        if (a.isNullAt(i) || b.isNullAt(i)) sawNull = true
+        else {
+          val p = Math.multiplyExact(a.getLong(i), b.getLong(i))
+          if (!sawNull) sum = Math.addExact(sum, p)
+        }
+        i += 1
+      }
+    } catch {
+      case _: ArithmeticException =>
+        throw new ArithmeticException(
+          s"dot_q overflow: quantized product or sum exceeded 64 bits at " +
+            s"element $i; rescale or normalize the embeddings")
+    }
+    if (sawNull) null else sum
   }
 
   private val signCache = new ConcurrentHashMap[(Int, Int), Array[Array[Long]]]()
@@ -147,6 +197,77 @@ case class CosineQuant(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(newLeft: Expression,
       newRight: Expression): CosineQuant = copy(newLeft, newRight)
+}
+
+/** `quantize_vec(array<float|double>) -> array<bigint>`: every component
+  * as [[VecOps.quant]], the 1e-6 fixed point `cosine_quant` uses; a null
+  * component stays null. The codegen'd form of
+  * [[VectorFunctions.quantize]].
+  */
+case class QuantizeVec(child: Expression) extends UnaryExpression {
+  // checkInputDataTypes directly: ExpectsInputTypes.inputTypes needs the
+  // private[sql] AbstractDataType
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(FloatType | DoubleType, _) =>
+      TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"quantize_vec requires array<float> or array<double>, got " +
+        other.catalogString)
+  }
+
+  override def dataType: DataType = ArrayType(LongType,
+    child.dataType.asInstanceOf[ArrayType].containsNull)
+  override def prettyName: String = "quantize_vec"
+
+  override def nullSafeEval(v: Any): Any =
+    VecOps.quantizeVec(v.asInstanceOf[ArrayData], isFloat)
+
+  private def isFloat: Boolean =
+    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
+
+  override protected def doGenCode(ctx: CodegenContext,
+      ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev,
+      c => s"graft.functions.VecOps.quantizeVec($c, $isFloat)")
+
+  override protected def withNewChildInternal(
+      newChild: Expression): QuantizeVec = copy(child = newChild)
+}
+
+/** `dot_q(array<bigint>, array<bigint>) -> bigint`: the exact integer dot
+  * product of two quantized vectors ([[VecOps.dotQ]]); NULL on a null
+  * component or a length mismatch, an error on 64-bit overflow. The
+  * codegen'd form of [[VectorFunctions.dotQ]].
+  */
+case class DotQ(left: Expression, right: Expression)
+    extends BinaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult =
+    (left.dataType, right.dataType) match {
+      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
+        TypeCheckResult.TypeCheckSuccess
+      case (l, r) => TypeCheckResult.TypeCheckFailure(
+        s"dot_q requires two array<bigint> inputs, got " +
+          s"${l.catalogString} / ${r.catalogString}")
+    }
+
+  override def dataType: DataType = LongType
+  override def prettyName: String = "dot_q"
+  override def nullable: Boolean = true
+
+  override def nullSafeEval(a: Any, b: Any): Any =
+    VecOps.dotQ(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext,
+      ev: ExprCode): ExprCode = {
+    val r = ctx.freshName("dot")
+    nullSafeCodeGen(ctx, ev, (a, b) => s"""
+      java.lang.Long $r = graft.functions.VecOps.dotQ($a, $b);
+      if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
+    """)
+  }
+
+  override protected def withNewChildrenInternal(newLeft: Expression,
+      newRight: Expression): DotQ = copy(newLeft, newRight)
 }
 
 /** `hplane_bucket(array<float>) -> bigint` with static (bits, dims). */

@@ -4,15 +4,21 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
-/** Embedding-vector math over `array<float>` columns, built on Spark's
-  * higher-order array functions (`transform`/`zip_with`/`aggregate`) so the
-  * dot product stays inside Catalyst — no UDF, no driver round-trips.
+/** The REFERENCE formulation of graft's embedding-vector math over
+  * `array<float>` columns, built from Spark's higher-order array functions
+  * (`transform`/`zip_with`/`aggregate`). These lambdas run interpreted, so
+  * no production path calls [[quantize]], [[dotQ]], [[normSqQ]] or
+  * [[cosine]]: the codegen'd kernels `quantize_vec`, `dot_q` and
+  * `cosine_quant` ([[QuantizeVec]], [[DotQ]], [[CosineQuant]]) and
+  * `hplane_bucket` for [[lshBucket]] do the work, and AnnSpec checks each
+  * kernel equal to its formulation here: values, NULLs and overflow.
   *
-  * Exactness strategy: similarity ranking must be identical across engines
-  * (DuckDB oracle) and across partitionings, so floats are quantized to
-  * fixed-point BIGINT (×1e6) and the dot/norm accumulate in integer space —
-  * order-independent and overflow-safe for unit-scale embeddings up to
-  * ~10k dims. Cosine is then a fixed expression over exact integers.
+  * Exactness: similarity ranking must be identical across engines (the
+  * DuckDB oracle) and partitionings, so floats are quantized to
+  * fixed-point BIGINT (×1e6) and dot products and norms accumulate in
+  * integer space, where the sum is order-independent; a 64-bit overflow
+  * fails under ANSI arithmetic. Cosine is then a fixed expression over
+  * exact integers ([[cosineFromQ]], which production code shares).
   */
 object VectorFunctions {
 
@@ -26,7 +32,9 @@ object VectorFunctions {
   def dotQ(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0L), (acc, x) => acc + x)
 
-  /** Exact integer squared norm of a quantized vector. */
+  /** Exact integer squared norm of a quantized vector (`dot_q(v, v)` in
+    * production).
+    */
   def normSqQ(a: Column): Column =
     aggregate(transform(a, x => x * x), lit(0L), (acc, x) => acc + x)
 

@@ -53,6 +53,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       graft.plans.ForeignScanPrune(session))
     ext.injectPreCBORule(session =>
       graft.plans.ForeignScanStrip(session))
+    // lambda-invariant subexpressions (a tokenizer a transform lambda
+    // re-reads per element) evaluate once per row, in a Project below
+    ext.injectPreCBORule(_ => graft.plans.HoistLambdaInvariants)
   }
 }
 

@@ -22,10 +22,12 @@ import graft.operators.Upsert
   * {{{
   * root/manifests/v<batch>.<gen>  # immutable manifest (text): a commit
   * root/manifests/.after-<name>   # successor claim of manifest <name>
-  * root/data/v<batch>/_b=<k>/   # bucket k as rewritten by batch <batch>
-  * root/data/v<batch>g<gen>e/_b=<k>/ # maintenance rewrite (tombstone expiry)
-  * root/data/v<batch>g<gen>r/_b=<k>/ # maintenance rewrite (rebucket)
+  * root/data/v<batch>-<a>/_b=<k>/ # bucket k as rewritten by batch <batch>
+  * root/data/v<batch>g<gen>e-<a>/_b=<k>/ # maintenance (tombstone expiry)
+  * root/data/v<batch>g<gen>r-<a>/_b=<k>/ # maintenance rewrite (rebucket)
   * }}}
+  *
+  * `<a>` names one commit attempt (see [[attemptTag]]).
   *
   * A manifest maps every live bucket to the data directory holding its
   * current rows, plus a header fixing the table configuration (keys,
@@ -502,6 +504,18 @@ object CdcApply {
     */
   private[streaming] def dirTagBatch(tag: String): Long =
     tag.stripPrefix("v").takeWhile(_.isDigit).toLong
+
+  /** The data directory of ONE commit attempt: `base` (`v<batch>`, or a
+    * maintenance generation's `v<batch>g<gen><op>`) plus `-<attempt>`.
+    * Data files are never rewritten in place (the Delta protocol's
+    * rule): two appliers of one batch id write disjoint directories, so
+    * the loser of the commit race cannot replace the winner's committed
+    * bucket files, and [[vacuum]] sweeps the loser's directory once no
+    * kept manifest references it. [[dirTagBatch]] reads the leading
+    * digits only.
+    */
+  private def attemptTag(base: String): String =
+    s"$base-${java.util.UUID.randomUUID().toString.take(8)}"
 
   /** Default tombstone retention (batches) — shared so the seeded
     * empty-table manifests syncMirror/syncRollup commit agree with the
@@ -1242,7 +1256,7 @@ object CdcApply {
         // writes under its OWN tag ('r'), so the loser of the race can
         // never clobber the winner's committed bucket dirs — the misuse
         // surfaces as a loud manifest-commit failure, not corruption
-        val dirTag = s"v${batchId}g${gen + 1}e"
+        val dirTag = attemptTag(s"v${batchId}g${gen + 1}e")
         // resolved read: a merge-on-read bucket's superseded delta rows
         // must not survive into the rewrite (the rewrite doubles as
         // that bucket's compaction — its pending deltas clear)
@@ -1382,7 +1396,7 @@ object CdcApply {
         // 'r' suffix: see the expiry-side note — distinct per-op data
         // dirs make a concurrent expiry/rebucket misuse unable to
         // overwrite each other's files
-        val dirTag = s"v${batchId}g${gen + 1}r"
+        val dirTag = attemptTag(s"v${batchId}g${gen + 1}r")
         if (m.buckets.nonEmpty) {
           // resolved read: re-keying must not carry superseded
           // merge-on-read delta rows into the new layout (a rebucket
@@ -1454,7 +1468,7 @@ object CdcApply {
         zCols.foreach(c => require(
           m.schema.forall(_.fieldNames.contains(c)),
           s"zorderBuckets: no column '$c' in the table schema"))
-        val dirTag = s"v${batchId}g${gen + 1}z"
+        val dirTag = attemptTag(s"v${batchId}g${gen + 1}z")
         val resolved = readBucketsResolved(spark, root, m, None).get
         val aged = conf.deletedCol.fold(resolved)(d =>
           resolved.filter(!(coalesce(col(d), lit(false)) &&
@@ -1526,7 +1540,7 @@ object CdcApply {
           // 'c' suffix: distinct per-op directories, as for expiry 'e'
           // and rebucket 'r' (and distinct from an inline-compact
           // apply's `v<batch>c`, which never coexists with gen > 0)
-          val dirTag = s"v${batchId}g${gen + 1}c"
+          val dirTag = attemptTag(s"v${batchId}g${gen + 1}c")
           val resolved = readBucketsResolved(spark, root, m,
             Some(targets)).get
           // a rewrite is when tombstones age (same clock as a merge)
@@ -1819,7 +1833,7 @@ object CdcApply {
           .withColumnRenamed(AppliedBatchCol, ChangeBatchCol)
           .write.mode("overwrite")
           .parquet(new Path(root, s"changelog/b$newBatch").toString)
-      val dirTag = s"v$newBatch"
+      val dirTag = attemptTag(s"v$newBatch")
       out.hint("rebalance", BucketCol)
         .write.partitionBy(BucketCol).mode("overwrite")
         .parquet(new Path(root, s"data/$dirTag").toString)
@@ -2785,7 +2799,7 @@ object CdcApply {
           lit(batchId) - coalesce(col(TsBatchCol), lit(batchId)) >=
             lit(conf.retention.toLong))))
 
-      val dirTag = s"v$batchId"
+      val dirTag = attemptTag(s"v$batchId")
       // one extra shuffle of TOUCHED data only, organizing files per
       // bucket dir. REBALANCE (not repartition): a plain hash
       // repartition maps each bucket to exactly ONE task, so one
@@ -2848,7 +2862,7 @@ object CdcApply {
         .withColumnRenamed(AppliedBatchCol, ChangeBatchCol)
         .write.mode("overwrite")
         .parquet(new Path(root, s"changelog/b$batchId").toString)
-    val dirTag = s"v$batchId"
+    val dirTag = attemptTag(s"v$batchId")
     val deltaEntries: Map[Int, BucketEntry] =
       if (toDelta.isEmpty) Map.empty
       else {
@@ -2867,7 +2881,7 @@ object CdcApply {
           }
         }
       }
-    val compactTag = s"v${batchId}c"
+    val compactTag = attemptTag(s"v${batchId}c")
     val compactEntries: Map[Int, BucketEntry] =
       if (toCompact.isEmpty) Map.empty
       else {

@@ -285,6 +285,57 @@ class AnnSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("quantize_vec and dot_q equal the VectorFunctions reference: " +
+      "random vectors, null components, length mismatches, overflow") {
+    import spark.implicits._
+    import org.apache.spark.sql.Column
+    import graft.functions.{GraftFunctions, VectorFunctions}
+    val rnd = new scala.util.Random(8)
+    // ragged dims, so a random pair is often a length mismatch; every
+    // 7th vector carries a null component
+    val vecs = (0 until 60).map { i =>
+      val v = Seq.fill(1 + rnd.nextInt(6))(
+        Option((rnd.nextGaussian() * 2).toFloat))
+      (i.toLong, if (i % 7 == 3) v.updated(0, None) else v)
+    }.toDF("id", "v")
+    val q = vecs.select($"id", VectorFunctions.quantize($"v").as("ref"),
+      GraftFunctions.quantizeVec($"v").as("q"))
+    val quantized = q.collect()
+    assert(quantized.forall(r => r.getSeq[Any](1) == r.getSeq[Any](2)))
+    assert(quantized.exists(r => r.getSeq[Any](2).contains(null)))
+    // doubles quantize like floats cast to double
+    val d = Seq(Seq(0.1234565, -2.5e-7, 3.0)).toDF("v")
+      .select(VectorFunctions.quantize($"v"), GraftFunctions.quantizeVec($"v"))
+      .head()
+    assert(d.getSeq[Long](0) == d.getSeq[Long](1))
+    val pairs = q.as("a").crossJoin(q.as("b"))
+      .select(VectorFunctions.dotQ($"a.q", $"b.q").as("ref"),
+        GraftFunctions.dotQ($"a.q", $"b.q").as("k"),
+        VectorFunctions.normSqQ($"a.q").as("ref_n"),
+        GraftFunctions.dotQ($"a.q", $"a.q").as("k_n"))
+      .collect()
+    assert(pairs.forall(r => r.get(0) == r.get(1) && r.get(2) == r.get(3)))
+    assert(pairs.exists(_.isNullAt(1)) && pairs.exists(!_.isNullAt(1)))
+    // the overflow bound: 3037000499² fits in 63 bits, 3037000500² and a
+    // sum past 2^63 do not; both forms fail, neither wraps
+    val edge = 3037000499L
+    def dot(f: (Column, Column) => Column, a: Seq[Long], b: Seq[Long]) =
+      Seq((a, b)).toDF("a", "b").select(f($"a", $"b")).head().get(0)
+    val forms = Seq[(Column, Column) => Column](
+      VectorFunctions.dotQ, GraftFunctions.dotQ)
+    forms.foreach { f =>
+      assert(dot(f, Seq(edge), Seq(edge)) == edge * edge)
+      Seq((Seq(edge + 1), Seq(edge + 1)),
+        (Seq(edge, 1000000000L), Seq(edge, 1000000000L))).foreach {
+        case (a, b) =>
+          val thrown = intercept[Throwable](dot(f, a, b))
+          val messages = Iterator.iterate(thrown)(_.getCause)
+            .takeWhile(_ != null).map(_.getMessage).mkString("; ")
+          assert(messages.toLowerCase.contains("overflow"), messages)
+      }
+    }
+  }
+
   test("cosine/quantization math: orthogonal is 0, opposite is -1") {
     import spark.implicits._
     import graft.functions.VectorFunctions._

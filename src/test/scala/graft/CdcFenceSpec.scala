@@ -326,6 +326,51 @@ class CdcFenceSpec extends AnyFunSuite with SparkTestBase
     assert(state == Set(1L -> 10.0, 2L -> 22.0), state.toString)
   }
 
+  test("two appliers of one batch id write disjoint data dirs: a loser " +
+    "held in its first job until the winner commits cannot replace " +
+    "the winner's bucket files") {
+    import org.apache.spark.sql.functions.{col, udf}
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val root = newRoot()
+    assert(CdcApply.applyBatch(b0, 0L, root, Seq("k"), "version",
+      Some("deleted")))
+    val latch = CdcFenceSpec.Latch.reset()
+    val hold = udf { (x: Double) => CdcFenceSpec.Latch.hold(); x }
+      .asNondeterministic()
+    val loser = Seq((1L, 2L, 11.0, false), (2L, 2L, 20.0, false))
+      .toDF("k", "version", "amount", "deleted")
+      .withColumn("amount", hold(col("amount")))
+    val winner = Seq((2L, 2L, 22.0, false)).toDF(
+      "k", "version", "amount", "deleted")
+    val lost = Future(CdcApply.applyBatch(loser, 2L, root, Seq("k"),
+      "version", Some("deleted")))
+    try {
+      assert(latch.started.await(120, SECONDS),
+        "the loser never reached its first job")
+      assert(CdcApply.applyBatch(winner, 2L, root, Seq("k"), "version",
+        Some("deleted")))
+    } finally latch.release.countDown()
+    intercept[java.util.ConcurrentModificationException] {
+      Await.result(lost, 300.seconds)
+    }
+    assert(CdcApply.currentManifestName(spark, root).contains("v2.0"))
+    val state = CdcApply.readSnapshot(spark, root).get.collect()
+      .map(r => (r.getAs[Long]("k"), r.getAs[Double]("amount"))).toSet
+    assert(state == Set(1L -> 10.0, 2L -> 22.0), state.toString)
+    // the loser's directory is garbage: vacuum sweeps it, the winner's
+    // stays, and the table still reads the winner's rows
+    val dirs = () => new java.io.File(root, "data").listFiles
+      .map(_.getName).filter(_.startsWith("v2-")).toSet
+    assert(dirs().size == 2, dirs().toString)
+    CdcApply.vacuum(spark, root, keep = 2, expireTombstones = false)
+    assert(dirs().size == 1, dirs().toString)
+    val after = CdcApply.readSnapshot(spark, root).get.collect()
+      .map(r => (r.getAs[Long]("k"), r.getAs[Double]("amount"))).toSet
+    assert(after == state)
+  }
+
   test("a head read racing metadata-only commits always resolves and " +
     "never moves backward") {
     val root = newRoot()
@@ -359,5 +404,28 @@ class CdcFenceSpec extends AnyFunSuite with SparkTestBase
     assert(reads > 0)
     assert(CdcApply.currentManifestName(spark, root)
       .contains(s"v0.$commits"))
+  }
+}
+
+object CdcFenceSpec {
+  /** Holds the first task that calls [[hold]] until [[release]] opens:
+    * tasks run in the test JVM (local mode), so one static latch pair
+    * reaches them.
+    */
+  object Latch {
+    final class Pair {
+      val started = new java.util.concurrent.CountDownLatch(1)
+      val release = new java.util.concurrent.CountDownLatch(1)
+    }
+    @volatile private var current = new Pair
+    private val first = new java.util.concurrent.atomic.AtomicBoolean(false)
+
+    def reset(): Pair = { current = new Pair; first.set(false); current }
+
+    def hold(): Unit =
+      if (first.compareAndSet(false, true)) {
+        current.started.countDown()
+        current.release.await(300, java.util.concurrent.TimeUnit.SECONDS)
+      }
   }
 }

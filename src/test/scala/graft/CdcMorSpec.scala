@@ -109,8 +109,8 @@ class CdcMorSpec extends AnyFunSuite with SparkTestBase {
     val touched = rows.filter(_.getAs[Int]("pending_deltas") > 0)
     val untouched = rows.filter(_.getAs[Int]("pending_deltas") == 0)
     assert(touched.nonEmpty && untouched.nonEmpty)
-    assert(untouched.forall(_.getAs[String]("data_dir").startsWith("v0/")))
-    assert(touched.forall(_.getAs[String]("data_dir").startsWith("v0/")),
+    assert(untouched.forall(_.getAs[String]("data_dir").matches("v0-[0-9a-f]{8}/.*")))
+    assert(touched.forall(_.getAs[String]("data_dir").matches("v0-[0-9a-f]{8}/.*")),
       "delta-appended buckets keep their original base directory")
   }
 
@@ -127,7 +127,7 @@ class CdcMorSpec extends AnyFunSuite with SparkTestBase {
     val rows = C.buckets(spark, root).collect()
       .map(r => (r.getAs[String]("data_dir"),
         r.getAs[Int]("pending_deltas")))
-    assert(rows.exists { case (d, n) => d.startsWith("v2c/") && n == 0 },
+    assert(rows.exists { case (d, n) => d.matches("v2c-[0-9a-f]{8}/.*") && n == 0 },
       s"expected an inline-compacted bucket in ${rows.toSeq}")
     assert(live(C.readSnapshot(spark, root).get)
       .view.filterKeys(Set(1L, 2L)).toMap ==

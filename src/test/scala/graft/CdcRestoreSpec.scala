@@ -130,7 +130,8 @@ class CdcRestoreSpec extends AnyFunSuite with SparkTestBase {
     assert(rewritten.keySet != after.keySet,
       "restore of a 2-key diff must not rewrite every bucket")
     rewritten.values.foreach(d =>
-      assert(d.startsWith("v3/"), s"rewritten dir $d not tagged v3"))
+      assert(d.matches("v3-[0-9a-f]{8}/.*"),
+        s"rewritten dir $d not tagged v3"))
   }
 
   test("merge-on-read restore equals the copy-on-write twin") {

@@ -283,6 +283,22 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     assert(uncapped.count() == 30L * 29L / 2L)
   }
 
+  test("cappedPairs sorts each bucket once, above and below the cap") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.expressions.ArraySort
+    // bucket 0 is over the cap (star pairs), bucket 1 under it
+    val keyed = ((0L until 12L).map(i => (0, 100L - i)) ++
+      (0L until 5L).map(i => (1, 50L - i))).toDF("k", "m")
+    val pairs = Dedup.cappedPairs(keyed, Seq("k"), "m", bucketCap = 10)
+    val sorts = pairs.queryExecution.optimizedPlan.collect { case n =>
+      n.expressions.map(_.collect { case _: ArraySort => () }.size).sum
+    }.sum
+    assert(sorts == 1, pairs.queryExecution.optimizedPlan)
+    val got = pairs.as[(Long, Long)].collect().toSet
+    assert(got == (90L to 100L).map(b => (89L, b)).toSet ++
+      (for (a <- 46L to 50L; b <- a + 1 to 50L) yield (a, b)).toSet)
+  }
+
   test("splitByCluster: co-clustered docs share a split; boundaries at " +
       "trainPct and trainPct+valPct; bad percents rejected") {
     import spark.implicits._

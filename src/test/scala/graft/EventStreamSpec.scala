@@ -448,6 +448,13 @@ class EventStreamSpec extends AnyFunSuite with SparkTestBase {
       .head().getInt(0)
   }
 
+  /** The data dirs of tag `tag` under `root`: one per commit attempt,
+    * named `<tag>-<attempt>`.
+    */
+  private def attemptDirs(root: String, tag: String): Seq[java.io.File] =
+    Option(new java.io.File(root, "data").listFiles).toSeq.flatten
+      .filter(_.getName.matches(s"$tag-[0-9a-f]{8}"))
+
   test("CDC apply rewrites only the buckets a batch touches") {
     import spark.implicits._
     val n = 8
@@ -461,7 +468,7 @@ class EventStreamSpec extends AnyFunSuite with SparkTestBase {
       .toDF("k", "version", "v", "deleted")
     assert(graft.streaming.CdcApply.applyBatch(b0, 0L, root,
       Seq("k"), "version", Some("deleted"), numBuckets = n))
-    val v0Buckets = new java.io.File(root, "data/v0").listFiles
+    val v0Buckets = attemptDirs(root, "v0").flatMap(_.listFiles)
       .map(_.getName).filter(_.startsWith("_b=")).toSet
     assert(v0Buckets.size == distinctBuckets.size)
 
@@ -470,14 +477,14 @@ class EventStreamSpec extends AnyFunSuite with SparkTestBase {
       .toDF("k", "version", "v", "deleted")
     assert(graft.streaming.CdcApply.applyBatch(upd, 1L, root,
       Seq("k"), "version", Some("deleted"), numBuckets = n))
-    val v1Buckets = new java.io.File(root, "data/v1").listFiles
+    val v1Buckets = attemptDirs(root, "v1").flatMap(_.listFiles)
       .map(_.getName).filter(_.startsWith("_b=")).toSet
     assert(v1Buckets == Set(s"_b=${bucketOf(7L, n)}"),
       s"batch touching one key rewrote buckets $v1Buckets")
     // untouched buckets are carried forward by manifest reference to v0
     val manifest = scala.io.Source.fromFile(
       new java.io.File(root, "manifests/v1.0")).mkString
-    val v0Refs = manifest.linesIterator.count(_.contains("v0/_b="))
+    val v0Refs = manifest.linesIterator.count(_.matches(".*v0-[0-9a-f]{8}/_b=.*"))
     assert(v0Refs == distinctBuckets.size - 1,
       s"expected ${distinctBuckets.size - 1} carried-forward buckets:\n" +
         manifest)
@@ -712,7 +719,7 @@ class EventStreamSpec extends AnyFunSuite with SparkTestBase {
       new java.io.File(root, "manifests/v1.1")).mkString
     assert(mf.linesIterator.next().contains("buckets=16"), mf)
     assert(mf.linesIterator.next().contains("ts=2000"), mf)
-    assert(mf.linesIterator.exists(_.contains("v1g1r/_b=")), mf)
+    assert(mf.linesIterator.exists(_.matches(".*v1g1r-[0-9a-f]{8}/_b=.*")), mf)
     assert(C.resolveAsOf(spark, root, 2500L).contains(1L))
     val h = C.history(spark, root).collect()
     val cur = h.filter(_.getAs[Boolean]("is_current"))
@@ -725,7 +732,7 @@ class EventStreamSpec extends AnyFunSuite with SparkTestBase {
     // and ignored) and lands its rows in 16-bucket directories
     assert(apply(Seq((7L, 3L, "v7c", false), (41L, 1L, "v41", false)),
       2L, 3000L))
-    val v2Buckets = new java.io.File(root, "data/v2").listFiles
+    val v2Buckets = attemptDirs(root, "v2").flatMap(_.listFiles)
       .map(_.getName).filter(_.startsWith("_b=")).toSet
     assert(v2Buckets == Set(7L, 41L).map(k => s"_b=${bucketOf(k, 16)}"),
       s"post-rebucket batch wrote $v2Buckets")
@@ -743,11 +750,11 @@ class EventStreamSpec extends AnyFunSuite with SparkTestBase {
     // batches 0/1 fall out, data/v0 and the old v1 bucket dirs go, and
     // the post-rebucket generation stays live via carried references
     C.vacuum(spark, root, keep = 2, expireTombstones = false)
-    assert(!new java.io.File(root, "data/v0").exists,
+    assert(attemptDirs(root, "v0").isEmpty,
       "old-layout v0 survived vacuum")
-    assert(!new java.io.File(root, "data/v1").exists,
+    assert(attemptDirs(root, "v1").isEmpty,
       "pre-rebucket v1 bucket dirs survived vacuum")
-    assert(new java.io.File(root, "data/v1g1r").exists,
+    assert(attemptDirs(root, "v1g1r").nonEmpty,
       "post-rebucket generation swept while still referenced")
     val s4 = C.readSnapshot(spark, root).get
       .select("k", "v").as[(Long, String)].collect().toSet
@@ -767,7 +774,7 @@ class EventStreamSpec extends AnyFunSuite with SparkTestBase {
       "empty batch reported as applied")
     assert(graft.streaming.CdcApply
       .currentManifestName(spark, root) == before)
-    assert(!new java.io.File(root, "data/v1").exists,
+    assert(attemptDirs(root, "v1").isEmpty,
       "empty batch copied the snapshot")
     // the stream continues past the gap
     val b2 = Seq((2L, 1L, "b", false)).toDF("k", "version", "v", "deleted")
@@ -866,7 +873,7 @@ class EventStreamSpec extends AnyFunSuite with SparkTestBase {
     assert(C.numBuckets(spark, root).contains(8))
     val b2 = C.buckets(spark, root).collect()
     assert(b2.map(_.getAs[Long]("rows")).sum == 30L)
-    assert(b2.forall(_.getAs[String]("data_dir").startsWith("v1g1r/")))
+    assert(b2.forall(_.getAs[String]("data_dir").matches("v1g1r-[0-9a-f]{8}/.*")))
     assert(b2.filter(!_.isNullAt(4)).map(_.getAs[Int]("bucket_id"))
       .toSeq == Seq(bucketOf(5L, 8)))
   }
@@ -899,7 +906,7 @@ class EventStreamSpec extends AnyFunSuite with SparkTestBase {
     // manifest-level pruning: only the touched bucket's dir is scanned —
     // every input file lives under the batch-1 rewrite, none under v0
     val files = since0.inputFiles
-    assert(files.nonEmpty && files.forall(_.contains("/v1/")),
+    assert(files.nonEmpty && files.forall(_.matches(".*/v1-[0-9a-f]{8}/.*")),
       files.mkString("\n"))
 
     // a consumer current through batch 1 sees nothing
@@ -1491,8 +1498,8 @@ class EventStreamSpec extends AnyFunSuite with SparkTestBase {
     assert(C.numBuckets(spark, root).contains(8))
     // and the rewrite landed in the rebucket-tagged dir, disjoint from
     // any expiry rewrite's target
-    assert(new java.io.File(root, "data/v1g1r").exists)
-    assert(!new java.io.File(root, "data/v1g1e").exists)
+    assert(attemptDirs(root, "v1g1r").nonEmpty)
+    assert(attemptDirs(root, "v1g1e").isEmpty)
   }
 
   test("pre-v6 manifests (no per-bucket stats) still parse and read") {

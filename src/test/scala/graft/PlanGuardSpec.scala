@@ -1,13 +1,17 @@
 package graft
 
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.catalyst.expressions.{Expression,
+  ExpressionSet, LambdaFunction, NamedLambdaVariable}
+import org.apache.spark.sql.catalyst.optimizer.CollapseProject
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Global plan guard: every declared query's physical plan is screened
   * for the two shapes that silently kill a 100 TB run — an unbounded
   * cartesian product, and a nested-loop join that isn't one of the
-  * documented 1-row broadcast query-vector joins. Every future query
-  * addition is screened automatically by being declared.
+  * documented 1-row broadcast query-vector joins — and its optimized
+  * plan for per-element re-evaluation of a lambda invariant. Every
+  * future query addition is screened automatically by being declared.
   */
 class PlanGuardSpec extends AnyFunSuite with SparkTestBase {
 
@@ -50,13 +54,19 @@ class PlanGuardSpec extends AnyFunSuite with SparkTestBase {
     * whose plan depends on its artifact cache is checked on the plan
     * of its first, cold run.
     */
-  private lazy val plans: Seq[(String, SparkPlan)] =
+  private lazy val executions: Seq[(String, QueryExecution)] =
     SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      name -> (try fn(spark, sfDir).queryExecution.sparkPlan
-        catch { case e: Throwable =>
+      name -> (try {
+        val qe = fn(spark, sfDir).queryExecution
+        qe.sparkPlan
+        qe
+      } catch { case e: Throwable =>
           fail(s"$name failed to plan: ${e.getMessage}")
-        })
+      })
     }
+
+  private def plans: Seq[(String, SparkPlan)] =
+    executions.map { case (name, qe) => name -> qe.sparkPlan }
 
   test("no declared query runs an unpartitioned window over data") {
     import org.apache.spark.sql.execution.window.WindowExec
@@ -87,5 +97,41 @@ class PlanGuardSpec extends AnyFunSuite with SparkTestBase {
     }
     assert(offenders.isEmpty,
       s"scale-hostile plan shapes:\n${offenders.mkString("\n")}")
+  }
+
+  /** Lambda-free (no free lambda variable), non-leaf, deterministic,
+    * non-constant subexpressions of `op`'s lambda bodies that `op` also
+    * evaluates unconditionally outside every lambda: each one runs again
+    * for every element. A field read of an attribute is exempt: it
+    * costs a pointer read, and Catalyst inlines it wherever it is bound.
+    */
+  private def perElementInvariants(exprs: Seq[Expression]): Seq[Expression] = {
+    val outside = ExpressionSet(
+      exprs.flatMap(graft.plans.HoistLambdaInvariants.unconditional))
+    def lambdaFree(e: Expression): Boolean = {
+      val bound = e.collect { case l: LambdaFunction => l.arguments }
+        .flatten.collect { case v: NamedLambdaVariable => v.exprId }.toSet
+      !e.exists {
+        case v: NamedLambdaVariable => !bound(v.exprId)
+        case _ => false
+      }
+    }
+    exprs.flatMap(_.collect { case l: LambdaFunction => l.function })
+      .flatMap(_.collect {
+        case e if e.children.nonEmpty && e.deterministic && !e.foldable &&
+          !CollapseProject.isCheap(e) && lambdaFree(e) &&
+          outside.contains(e) => e
+      })
+  }
+
+  test("no optimized plan re-evaluates a lambda invariant per element") {
+    val offenders = executions.flatMap { case (name, qe) =>
+      qe.optimizedPlan.collectWithSubqueries { case op =>
+        perElementInvariants(op.expressions)
+          .map(e => s"$name: ${op.nodeName} re-evaluates $e")
+      }.flatten.distinct
+    }
+    assert(offenders.isEmpty,
+      s"lambda invariants evaluated per element:\n${offenders.mkString("\n")}")
   }
 }
