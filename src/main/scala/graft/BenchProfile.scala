@@ -2,13 +2,15 @@ package graft
 
 import org.apache.spark.sql.execution.ExplainMode
 
+import graft.plans.PlanFacts
+
 /** Optimization-round measurement harness (guide §1): for the queries
   * named in SPARK_GRAFT_QUERIES (comma-separated; default: the heavy
   * tail), runs each through the noop sink `reps` times and reports
   *   - wall seconds per rep (min/median),
   *   - Catalyst phase times (analysis/optimization/planning) from the
   *     QueryPlanningTracker,
-  *   - Exchange / Join-strategy counts from the executed plan,
+  *   - the [[PlanFacts]] operator counts of the executed plan,
   * and dumps the formatted plan to target/profile/<name>.txt. Purely a
   * measurement tool — not part of the declared query surface.
   */
@@ -51,13 +53,11 @@ object BenchProfile {
       val planStr = qe.explainString(ExplainMode.fromString("formatted"))
       val phases = qe.tracker.phases.map { case (p, s) =>
         s"$p=${(s.endTimeMs - s.startTimeMs)}ms" }.mkString(" ")
-      val nExchange = planStr.linesIterator.count(_.contains("Exchange"))
-      val joins = Seq("BroadcastHashJoin", "SortMergeJoin",
-        "ShuffledHashJoin", "BroadcastNestedLoopJoin")
-        .map(j => s"$j=${planStr.linesIterator.count(l =>
-          l.contains(j))}").mkString(" ")
+      val facts = PlanFacts.of(qe)
+      val counts = facts.productElementNames.zip(facts.productIterator)
+        .map { case (k, v) => s"$k=$v" }.mkString(" ")
       println(f"PROFILE $n%-28s min=${times.head}%.3f med=${times(times.size / 2)}%.3f " +
-        s"exchanges=$nExchange $joins phases[$phases]")
+        s"$counts phases[$phases]")
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(s"target/profile/$n.txt"), planStr)
     }
